@@ -29,6 +29,20 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
+def _sym_edges(pairs: DataFrame, src_col: str, dst_col: str) -> DataFrame:
+    """Both directions of an undirected pair list as ``(src, dst)`` rows,
+    eagerly localCheckpointed: every iterative loop below references the
+    edge list once per round, so the (usually expensive) upstream pair
+    plan runs once, not once per round."""
+    return (
+        pairs.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
+        .unionByName(
+            pairs.select(F.col(dst_col).alias("src"), F.col(src_col).alias("dst"))
+        )
+        .localCheckpoint(eager=True)
+    )
+
+
 def connected_components(
     nodes: DataFrame,
     edges: DataFrame,
@@ -43,10 +57,7 @@ def connected_components(
     input (symmetrized internally). Raises if not converged in ``max_iter``
     rounds — converge-or-die beats silently-partial clusters.
     """
-    sym = edges.select(
-        F.col(src_col).alias("src"), F.col(dst_col).alias("dst")
-    ).union(edges.select(F.col(dst_col).alias("src"), F.col(src_col).alias("dst")))
-    sym = sym.localCheckpoint(eager=True)
+    sym = _sym_edges(edges, src_col, dst_col)
 
     all_nodes = nodes.select(F.col(id_col).alias("id"))
     # Only edge-touched nodes participate in propagation — singletons (the
@@ -267,18 +278,6 @@ def connected_components_star(
     raise RuntimeError(f"connected_components_star: no fixpoint in {max_iter} rounds")
 
 
-def _pairs_equal(old: DataFrame, old_n: int, new: DataFrame, new_n: int) -> bool:
-    """Exact (u, v) pair-SET equality: equal cardinality and new ⊆ old.
-
-    Both inputs are distinct pair sets (every producer ends in .distinct()),
-    so ``|old| == |new|`` plus an empty ``new ∖ old`` anti-join proves set
-    equality outright — no hash witness, no collision class to argue about.
-    """
-    if old_n != new_n:
-        return False
-    return new.join(old, ["u", "v"], "left_anti").isEmpty()
-
-
 def triangle_stats(
     edges: DataFrame,
     src_col: str = "src",
@@ -388,13 +387,7 @@ def pagerank_fixed(
     re-execute the candidate-pair subplan k times.
     """
     n = nodes.count()
-    edges = (
-        pairs.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
-        .unionByName(
-            pairs.select(F.col(dst_col).alias("src"), F.col(src_col).alias("dst"))
-        )
-        .localCheckpoint(eager=True)
-    )
+    edges = _sym_edges(pairs, src_col, dst_col)
     deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("deg")).localCheckpoint(
         eager=True
     )
@@ -461,13 +454,7 @@ def bfs_distances(
     expensive subplan). At 100 TB each round is one edge-key join plus
     one narrow (node, dist) shuffle, exactly as before.
     """
-    edges = (
-        pairs.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
-        .unionByName(
-            pairs.select(F.col(dst_col).alias("src"), F.col(src_col).alias("dst"))
-        )
-        .localCheckpoint(eager=True)
-    )
+    edges = _sym_edges(pairs, src_col, dst_col)
     dist = seeds.select(
         F.col(id_col).alias("v"), F.lit(0).cast("bigint").alias("d")
     )
@@ -527,13 +514,7 @@ def label_propagation_fixed(
     mode semantics; the whole chain plans as ONE job with zero per-round
     driver barriers.
     """
-    edges = (
-        pairs.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
-        .unionByName(
-            pairs.select(F.col(dst_col).alias("src"), F.col(src_col).alias("dst"))
-        )
-        .localCheckpoint(eager=True)
-    )
+    edges = _sym_edges(pairs, src_col, dst_col)
     labels = nodes.select(
         F.col(id_col).alias("v"), F.col(id_col).cast("bigint").alias("lbl")
     )
@@ -600,21 +581,13 @@ def kcore_peel(
     exchanges + checkpoint job (the window sort is over 16-byte rows —
     codegen sort, spillable, cheap relative to a per-round barrier).
     """
-    from pyspark.sql import Window as _W
-
-    edges = (
-        pairs.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
-        .unionByName(
-            pairs.select(F.col(dst_col).alias("src"), F.col(src_col).alias("dst"))
-        )
-        .localCheckpoint(eager=True)
-    )
+    edges = _sym_edges(pairs, src_col, dst_col)
     for _ in range(rounds):
         edges = (
             edges.withColumn(
-                "_ds", F.count(F.lit(1)).over(_W.partitionBy("src"))
+                "_ds", F.count(F.lit(1)).over(Window.partitionBy("src"))
             )
-            .withColumn("_dd", F.count(F.lit(1)).over(_W.partitionBy("dst")))
+            .withColumn("_dd", F.count(F.lit(1)).over(Window.partitionBy("dst")))
             .where((F.col("_ds") >= k) & (F.col("_dd") >= k))
             .select("src", "dst")
         )

@@ -12,7 +12,7 @@ AGGREGATE) — no Python UDFs; the LSH path uses Spark MLlib (JVM) via
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 #: Sequential left-fold dot product in DOUBLE — deterministic evaluation
@@ -333,12 +333,12 @@ NPROBE_RECALL_DECAY_95B = 0.33
 #: findable only through its single home cell, so accept recall was capped
 #: by P(candidate's home cell ∈ probe's top-p) — measured 0.656 at the 64×
 #: tier (p=40/C=358) with EVERY miss a best-dropped case whose screen
-#: margin collapsed into the near-tie band (tools/margin_grayzone_probe.py:
+#: margin collapsed into the near-tie band (SCALE.md §3.13 gray-zone probe:
 #: eps-widened gates are empirically blind there — reaching 0.85 recall by
 #: gate-widening alone needs ~60% of probes escalated ≈ half the flat
 #: scan). Multi-assigning the CORPUS side to its top-q cells gives each
 #: top-2 member q chances to intersect the probe window; the measured 64×
-#: frontier (tools/margin_rulec_sweep.py, flat-truth ground truth,
+#: frontier (SCALE.md §3.13 rule-C sweep, flat-truth ground truth,
 #: candidate volume ∝ q·p): (q=1,p=40) 0.656 → (q=3,p=27) 0.906 →
 #: (q=4,p=20) 0.922 at MATCHED ~2× volume → (q=3,p=40) 0.969 at 3× —
 #: balanced q·p beats raw p at matched volume (raw p=40→80 extrapolates
@@ -362,7 +362,7 @@ MARGIN_CORPUS_ASSIGN = 4
 #: of probes (verify volume stays |escalated|·n ≪ screen volume) and is
 #: monotone — recall can only rise. The honest caveat stays measured: on
 #: the isotropic fixture most best-dropped misses collapse DEEPER than any
-#: affordable eps (margin_grayzone_probe eps-tables); the symmetrized
+#: affordable eps (SCALE.md §3.13 eps-tables); the symmetrized
 #: screen above, not this guard, is what recovers them.
 MARGIN_ESC_MARGIN = 0.04
 MARGIN_ESC_FLOOR = 0.29
@@ -478,7 +478,7 @@ def margin_screen_dials(
     calibrated schedule's probe budget moved to the corpus side, keeping
     candidate volume at q·p ≈ 2× the round-9 asymmetric screen while the
     measured accept recall rises 0.656 → 0.922 (default dial) at the 64×
-    tier (see MARGIN_CORPUS_ASSIGN above; tools/margin_rulec_sweep.py).
+    tier (see MARGIN_CORPUS_ASSIGN above; SCALE.md §3.13).
     The floor keeps every fixture SF at the audited p=5, so fixture plans
     differ from round 9 only by the corpus-side multi-assign (arn ≤ 4 in
     the oracle twin) and the pair de-duplication it requires.
@@ -1746,6 +1746,23 @@ def lsh_ann_pairs(
     )
 
 
+def _fused_avg_sim() -> Column:
+    """Per-cell ``avg_sim`` over a fused (cell, pos) aggregate of ``n``
+    members and ``ssim`` csim sums. MAX over pos re-reads the per-cell
+    sum only when every pos group counted every member (fixed-dim
+    vectors); a ragged cell (MIN(n) != MAX(n)) fails the action instead
+    of dividing the largest pos-group sum. Same aggregate, no extra job."""
+    return F.when(
+        F.min("n") != F.max("n"),
+        F.raise_error(
+            F.concat(
+                F.lit("kmeans: ragged embeddings in cell "),
+                F.col("cell").cast("string"),
+            )
+        ),
+    ).otherwise(F.max("ssim").cast("double") / F.max("n"))
+
+
 def kmeans_lloyd_stats(
     emb: DataFrame,
     n_centroids: int = 8,
@@ -1783,7 +1800,8 @@ def kmeans_lloyd_stats(
     one assignment execution (was one job, two executions). All derived
     expressions are bit-identical to the previous two-pass forms (same
     decimal sums, same single IEEE division per audit column; vectors
-    are fixed-dim non-empty per the embeddings contract).
+    are fixed-dim non-empty per the embeddings contract, and a ragged
+    cell raises — see :func:`_fused_avg_sim`).
     """
     cents = (
         emb.orderBy(id_col)
@@ -1817,7 +1835,7 @@ def kmeans_lloyd_stats(
         .groupBy("cell")
         .agg(
             F.max("n").alias("n_members"),
-            (F.max("ssim").cast("double") / F.max("n")).alias("avg_sim"),
+            _fused_avg_sim().alias("avg_sim"),
             F.expr(
                 "ROUND(SQRT(CAST(SUM(CAST(d2 AS DECIMAL(38,20))) AS DOUBLE)), 4)"
             ).alias("centroid_shift"),
@@ -1870,7 +1888,8 @@ def kmeans_lloyd_rounds(
     count, decimal-bridged component mean, and the decimal csim sum
     (identical at every pos since each member contributes once per pos
     group; MAX over pos re-reads it; vectors are fixed-dim non-empty
-    per the embeddings contract) — and a single per-cell aggregate over
+    per the embeddings contract, and a ragged cell raises) — and a
+    single per-cell aggregate over
     those k × dim rows (joined to the broadcast old centroids) emits
     all three audit columns at once. For rounds that feed a successor,
     the (cell, pos) table is the round's only eager checkpoint (the
@@ -1929,7 +1948,7 @@ def kmeans_lloyd_rounds(
             .groupBy("cell")
             .agg(
                 F.max("n").alias("n_members"),
-                (F.max("ssim").cast("double") / F.max("n")).alias("avg_sim"),
+                _fused_avg_sim().alias("avg_sim"),
                 F.expr(
                     "ROUND(SQRT(CAST(SUM(CAST(d2 AS DECIMAL(38,20))) AS DOUBLE)), 4)"
                 ).alias("centroid_shift"),

@@ -296,8 +296,7 @@ WHERE host_rank <= 12
     "at 100 TB the totals pass is a near-free counted scan while the "
     "cap pass never builds a partition bigger than max(host)/32. "
     "Measured on planted 90%-one-host tiers: 2.5x/11.9x faster than "
-    "the naive window at 2M/16M rows (SCALE 3.18, "
-    "tools/domain_cap_skew_ab.py)",
+    "the naive window at 2M/16M rows (SCALE.md §3.18)",
     tags=("llm", "sampling", "dedup"),
 )
 def q_llm_domain_cap(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -316,9 +315,9 @@ def q_llm_domain_cap(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def domain_cap_naive_plan(hosts: DataFrame, cap: int) -> DataFrame:
     """The single-window reference semantics the oracle states — kept as
-    the ONE shared correctness anchor for both the planted-skew
-    equivalence test (tests/test_round13_ops.py) and the skew A/B tool
-    (tools/domain_cap_skew_ab.py). Never the shipped plan: the window on
+    the correctness anchor for the planted-skew equivalence test
+    (tests/test_round13_ops.py) and the skew A/B recorded in SCALE.md
+    §3.18. Never the shipped plan: the window on
     host funnels a pathological host through one partition (measured
     11.9x slower at a planted 16M-row 90%-one-host tier, SCALE §3.18)."""
     from pyspark.sql import Window

@@ -2089,7 +2089,7 @@ FROM est e LEFT JOIN vbest2 v ON v.probe_id = e.probe_id
     "the probe window) with the probe dial halved — candidate volume "
     "2x round 9, measured accept recall 0.656->0.922 (default dial) "
     "and 0.422->0.672 (0.90 notch) at the 64x tier "
-    "(tools/margin_rulec_sweep.py; SCALE.md §3.13). A pair can now "
+    "(SCALE.md §3.13). A pair can now "
     "meet in up to 4 cells, so scored "
     "pairs are de-duplicated (GROUP BY probe,cand with MAX over "
     "identical rounded sims) before the top-2 window — one extra "
@@ -2350,8 +2350,8 @@ FROM agg
     "plans' SQL (shared CTEs f-prefixed for the flat side). Ground "
     "truth is quadratic BY DEFINITION — production runs this audit on "
     "a bounded probe sample exactly as the tier instruments do "
-    "(tools/margin_tier_probe.py measured 0.9219/0.6719 at the 64x "
-    "tier, SCALE.md §3.13); the declared form certifies the audit "
+    "(the SCALE.md §3.13 tier probe measured 0.9219/0.6719 at the "
+    "64x tier); the declared form certifies the audit "
     "MACHINERY cross-engine at fixture scale",
     tags=("llm", "similarity", "approx"),
 )
@@ -3011,7 +3011,7 @@ FROM agg
     "literally by the oracle twin), accept_recall (NULL via NULLIF "
     "when the fixture has no true accepts). Ground truth is quadratic "
     "BY DEFINITION — production runs this audit on a bounded probe "
-    "sample exactly as tools/ratio_tier_probe.py does; the declared "
+    "sample exactly as the SCALE.md §3.15 tier probe did; the declared "
     "form certifies the audit machinery cross-engine at fixture scale. "
     "Count ratios are int64->double (correctly rounded both engines) "
     "with ROUND(x, 6) far from half-ulp boundaries at fixture "

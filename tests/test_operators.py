@@ -275,21 +275,6 @@ def test_connected_components_star_long_chain_logarithmic_rounds(spark):
     assert got == {(i, 1) for i in range(1, 30)}
 
 
-def test_star_fixpoint_check_is_exact_set_equality(spark):
-    """Round-3 verdict item 6: convergence declaration must not rest on a
-    hash witness. Two same-cardinality pair sets that differ in content —
-    the exact shape a (count, xor)-collision would silently accept — must
-    compare unequal, and a true fixpoint (same set, any row order) equal."""
-    from join_example_spark.operators.graph import _pairs_equal
-
-    old = spark.createDataFrame([(2, 1), (3, 1), (5, 4)], ["u", "v"])
-    same_count_diff = spark.createDataFrame([(2, 1), (3, 1), (6, 4)], ["u", "v"])
-    reordered = spark.createDataFrame([(5, 4), (2, 1), (3, 1)], ["u", "v"])
-    assert not _pairs_equal(old, 3, same_count_diff, 3)
-    assert not _pairs_equal(old, 3, old.limit(2), 2)  # cardinality gate
-    assert _pairs_equal(old, 3, reordered, 3)
-
-
 def test_connected_components_star_string_ids(spark):
     from join_example_spark.operators.graph import connected_components_star
 

@@ -45,20 +45,27 @@ def test_column_pruning_reaches_scan(spark):
     assert schemas and all(len(cols) <= 5 for cols in schemas), schemas
 
 
-def test_no_python_udfs_in_batch_queries(spark):
+@pytest.fixture(scope="module")
+def all_plans(spark):
+    """Every declared query's DataFrame, built once at sf0.001 for the
+    whole-registry gates below (plan building fires the iterative
+    operators' eager checkpoint jobs, so each rebuild costs real time)."""
+    return {name: spec.fn(spark, SF_SMOKE) for name, spec in _REG.items()}
+
+
+def test_no_python_udfs_in_batch_queries(all_plans):
     offenders = []
-    for name, spec in _REG.items():
-        if "multimodal" in spec.tags:
+    for name, df in all_plans.items():
+        if "multimodal" in _REG[name].tags:
             # The one sanctioned Arrow boundary (mapInPandas media decode);
             # its correctness is certified by its own oracle hash-match.
             continue
-        df = spec.fn(spark, SF_SMOKE)
         if has_python_udf(df):
             offenders.append(name)
     assert not offenders, f"Python UDFs in batch plans: {offenders}"
 
 
-def test_all_query_outputs_are_flat_scalars(spark):
+def test_all_query_outputs_are_flat_scalars(all_plans):
     # The driver canonicalizes EVERY query's output (rows-only included)
     # with pandas sort_values, which crashes on list cells (unhashable) —
     # CORRECTNESS_r01: q_fn_regex, q_agg_approx_percentile. No declared
@@ -66,8 +73,7 @@ def test_all_query_outputs_are_flat_scalars(spark):
     from pyspark.sql.types import ArrayType, MapType, StructType
 
     offenders = []
-    for name, spec in _REG.items():
-        df = spec.fn(spark, SF_SMOKE)
+    for name, df in all_plans.items():
         bad = [
             f.name
             for f in df.schema.fields
@@ -531,7 +537,7 @@ _NULLABLE_GENERATE_ALLOWLIST = frozenset({
 })
 
 
-def test_nullable_generator_inputs_are_consciously_admitted(spark):
+def test_nullable_generator_inputs_are_consciously_admitted(all_plans):
     """Walk every declared optimized plan; any Generate whose generator
     input is schema-nullable must be on the allowlist above."""
     def walk(node):
@@ -541,8 +547,7 @@ def test_nullable_generator_inputs_are_consciously_admitted(spark):
             yield from walk(ch.apply(i))
 
     offenders = []
-    for name, spec in _REG.items():
-        df = spec.fn(spark, SF_SMOKE)
+    for name, df in all_plans.items():
         plan = df._jdf.queryExecution().optimizedPlan()
         for n in walk(plan):
             if n.getClass().getSimpleName() != "Generate":

@@ -38,7 +38,7 @@ class TestMarginScreenDials:
         # fixture SFs: probe dial floors at the audited 5
         assert margin_screen_dials(500) == (4, 5)
         assert margin_screen_dials(2000) == (4, 5)
-        # measured 64x-tier landing points (tools/margin_rulec_sweep.py):
+        # measured 64x-tier landing points (SCALE.md §3.13):
         # default (4, 20) -> accept recall 0.9219; the halved 0.90-notch
         # probe dial is ceil(14/2) = 7
         assert margin_screen_dials(128000) == (4, 20)

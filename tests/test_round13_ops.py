@@ -90,114 +90,6 @@ def test_domain_cap_planted_skew_equivalence(spark):
         assert got == want, f"salts={salts} diverged from single-window semantics"
 
 
-def _unit_rows(n: int, dim: int = 8):
-    """Deterministic unit vectors with clustered structure (3 pseudo-labels)
-    — no RNG, reproducible across sessions."""
-    import math
-
-    rows = []
-    for i in range(n):
-        raw = [math.sin(0.7 * i * (j + 1) + (i % 3)) + (2.0 if j == i % 3 else 0.0)
-               for j in range(dim)]
-        nrm = math.sqrt(sum(x * x for x in raw))
-        rows.append((i, [float(x / nrm) for x in raw], f"l{i % 3}"))
-    return rows
-
-
-class TestGraphAnn:
-    """NSW-style graph ANN (library operator, VERDICT r12 task 6)."""
-
-    def test_brute_force_complete(self, spark):
-        """With a complete graph (single cell, degree=n) and beam=n, one
-        expansion round visits every node — the search must equal the
-        exact flat scan ROW FOR ROW (sims and ranks included)."""
-        from join_example_spark.operators.ann_graph import knn_graph, nsw_search
-        from join_example_spark.operators.similarity import cosine_topk
-
-        n = 40
-        emb = spark.createDataFrame(
-            _unit_rows(n), "vec_id bigint, embedding array<float>, label string"
-        )
-        edges = knn_graph(emb, degree=n, n_centroids=1, nprobe=1)
-        # probe_pred="true": EVERY row is a probe (the family-convention
-        # escape hatch; the default split would probe only vec_id 0 here)
-        got = sorted(
-            map(
-                tuple,
-                nsw_search(
-                    emb, edges, k=3, beam=n, rounds=2, probe_pred="true"
-                ).collect(),
-            )
-        )
-        one = emb.withColumn("one", F.lit(1))
-        # cosine_topk's None = no probe restriction (its documented
-        # inversion of the ANN-operator convention)
-        want = sorted(
-            map(
-                tuple,
-                cosine_topk(one, k=3, block_col="one", probe_pred=None).collect(),
-            )
-        )
-        assert len(want) == 3 * n
-        assert got == want
-
-    def test_partition_independent(self, spark):
-        from join_example_spark.operators.ann_graph import knn_graph, nsw_search
-
-        emb = spark.createDataFrame(
-            _unit_rows(60), "vec_id bigint, embedding array<float>, label string"
-        )
-        key = "spark.sql.shuffle.partitions"
-        old = spark.conf.get(key)
-        results = []
-        try:
-            for parts in ("7", "3"):
-                spark.conf.set(key, parts)
-                edges = knn_graph(emb, degree=8, n_centroids=4, nprobe=2)
-                results.append(
-                    sorted(
-                        map(
-                            tuple,
-                            nsw_search(
-                                emb, edges, k=3, beam=8, rounds=3,
-                                probe_pred="vec_id % 20 = 0",
-                            ).collect(),
-                        )
-                    )
-                )
-        finally:
-            spark.conf.set(key, old)
-        assert len(results[0]) == 9  # 3 probes x k
-        assert results[0] == results[1]
-
-    @pytest.mark.parametrize(
-        "sf,want_recall",
-        [
-            # deterministic pipeline -> exact recall values, not samples
-            # (measured round 13 at the default dials; see the module
-            # docstring's frontier table)
-            ("/root/testdata/sf0.001", 1.0),   # n=500 tier
-            ("/root/testdata/sf0.1", 0.9667),  # n=2000 tier
-        ],
-    )
-    def test_two_tier_recall_pinned(self, spark, sf, want_recall):
-        import math
-
-        from join_example_spark.operators.ann_graph import knn_graph, nsw_search
-        from join_example_spark.operators.similarity import cosine_topk
-        from join_example_spark.sources.readers import read_table, table_row_count
-
-        emb = read_table(spark, sf, "embeddings")
-        nc = int(math.ceil(math.sqrt(table_row_count(sf, "embeddings"))))
-        edges = knn_graph(emb, n_centroids=nc)
-        got = nsw_search(emb, edges, k=3).select("probe_id", "cand_id")
-        one = emb.withColumn("one", F.lit(1))
-        truth = cosine_topk(one, k=3, block_col="one").select("probe_id", "cand_id")
-        n_truth = truth.count()
-        hits = truth.join(got, ["probe_id", "cand_id"]).count()
-        assert round(hits / n_truth, 4) == want_recall
-
-
 def test_total_adjudication_separates_hot_session_from_regression():
     """Round-13 pin (VERDICT r12 task 2): the suite-total adjudicator must
     read DIFFUSE inflation (every query a little slow, none clearing 2x

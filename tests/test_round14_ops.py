@@ -6,14 +6,7 @@
    against the same recursive-CTE oracle at half the cost, and IS the
    scale path — O(log n) rounds vs O(diameter)); full oracle parity for
    the retiree is preserved here at both fixture SFs.
-2. adaptive_nsw_dials (VERDICT r13 task 1): schedule unit pins (anchor
-   landings, fixture-SF floor, monotonicity, uncalibrated-target refusal)
-   plus the two-tier recall audit under the ADAPTIVE dial — 0.9667 at
-   n=2k and 0.9400 at the rotation-enlarged 16k tier, both measured
-   through the committed sweep tool (tools/nsw_dial_sweep.py) and both
-   >= the 0.90 calibration target. The pipeline is deterministic, so the
-   recalls are exact equality pins, not tolerance samples.
-3. q_llm_quality_model third-implementation pin: the oracle mirror proves
+2. q_llm_quality_model third-implementation pin: the oracle mirror proves
    Spark == DuckDB; this recomputes a sample of documents' scores in pure
    Python (tokenize -> portable char-fold hash -> frozen affine weights)
    so a spec bug shared by both SQL twins can't hide.
@@ -53,94 +46,6 @@ def test_r14_retirees_in_library_tier_only():
         assert lib[name].oracle is not None, f"{name} lost its oracle"
     # the sibling that carries the clustering contract stays declared
     assert "q_llm_dedup_cluster_star" in declared
-
-
-class TestAdaptiveNswDials:
-    def test_fixture_floor_and_anchors(self):
-        from join_example_spark.operators.ann_graph import adaptive_nsw_dials
-
-        # every fixture SF sits on the audited defaults — identical plans
-        # and the round-13 recall pins survive unchanged
-        for n in (1, 500, 2000):
-            assert adaptive_nsw_dials(n) == (16, 3, 32, 8)
-        # the measured 16k landing (tools/nsw_dial_sweep.py: recall 0.9400)
-        assert adaptive_nsw_dials(16_000) == (24, 4, 64, 12)
-        assert adaptive_nsw_dials(16_000, target_recall=0.90) == (24, 4, 64, 12)
-        # the measured next-octave landing (32x tier sweep: recall 0.96 vs
-        # the frozen 16k dial's 0.86 — SCALE 3.19 extrapolation test; too
-        # heavy to re-run in the suite, the sweep tool regenerates it)
-        assert adaptive_nsw_dials(64_000) == (30, 5, 128, 16)
-
-    def test_monotone_in_n(self):
-        from join_example_spark.operators.ann_graph import adaptive_nsw_dials
-
-        prev = adaptive_nsw_dials(1000)
-        for n in (2_000, 4_000, 8_000, 16_000, 64_000, 256_000, 1_000_000):
-            cur = adaptive_nsw_dials(n)
-            assert all(c >= p for c, p in zip(cur, prev)), (n, prev, cur)
-            prev = cur
-
-    def test_uncalibrated_target_raises(self):
-        from join_example_spark.operators.ann_graph import adaptive_nsw_dials
-
-        with pytest.raises(ValueError):
-            adaptive_nsw_dials(16_000, target_recall=0.95)
-
-
-def _nsw_recall(spark, emb, n):
-    """Top-3 recall of the adaptive-dial NSW search vs the exact flat scan
-    (the sweep tool's protocol: probes = vec_id % max(100, n // 50) = 0)."""
-    import math
-
-    from join_example_spark.operators.ann_graph import (
-        adaptive_nsw_dials,
-        knn_graph,
-        nsw_search,
-    )
-    from join_example_spark.operators.similarity import cosine_topk
-
-    degree, nprobe, beam, rounds = adaptive_nsw_dials(n)
-    nc = int(math.ceil(math.sqrt(n)))
-    probe_pred = f"vec_id % {max(100, n // 50)} = 0"
-    edges = knn_graph(emb, degree=degree, n_centroids=nc, nprobe=nprobe)
-    got = nsw_search(
-        emb, edges, k=3, beam=beam, rounds=rounds, probe_pred=probe_pred
-    ).select("probe_id", "cand_id")
-    one = emb.withColumn("one", F.lit(1))
-    truth = cosine_topk(one, k=3, block_col="one", probe_pred=probe_pred).select(
-        "probe_id", "cand_id"
-    )
-    n_truth = truth.count()
-    hits = truth.join(got, ["probe_id", "cand_id"]).count()
-    return round(hits / n_truth, 4)
-
-
-def test_adaptive_nsw_recall_2k_tier(spark):
-    from join_example_spark.sources.readers import read_table, table_row_count
-
-    sf = "/root/testdata/sf0.1"
-    emb = read_table(spark, sf, "embeddings")
-    n = table_row_count(sf, "embeddings")
-    rec = _nsw_recall(spark, emb, n)
-    assert rec == 0.9667  # == the defaults (floor), round-13 pin
-    assert rec >= 0.90
-
-
-def test_adaptive_nsw_recall_16k_tier(spark):
-    """The deliverable pin: at the tier where the FIXED defaults decay to
-    0.7333, the adaptive schedule restores 0.9400 (measured, deterministic).
-    ~1-2 min on the test session — the cost of auditing the one measured
-    recall decay the tree had left (VERDICT r13 task 1)."""
-    from join_example_spark.sources.readers import read_table, table_row_count
-    from tools.nsw_dial_sweep import rotation_tier
-
-    sf = "/root/testdata/sf0.1"
-    base = read_table(spark, sf, "embeddings")
-    n0 = table_row_count(sf, "embeddings")
-    big = rotation_tier(base, 8, n0).repartition(8).localCheckpoint(eager=True)
-    rec = _nsw_recall(spark, big, 8 * n0)
-    assert rec == 0.94
-    assert rec >= 0.90
 
 
 def _py_str_hash(s: str, p: int = 1_000_003) -> int:

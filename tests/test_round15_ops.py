@@ -128,23 +128,6 @@ def test_bench_library_pass_is_optin_and_excluded_from_total():
     assert "lib_timings[name] = round" in src
 
 
-def test_nsw_secondary_dials_step_immediately_past_anchor():
-    """ADVICE r14 (doc honesty): the secondary NSW dials use CEILING
-    semantics — the full next-tier (nprobe, beam, rounds) fires at
-    n = anchor+1, not at 16k. Pin the behavior the docstring now
-    documents so a future 'fix' to floor semantics is a conscious
-    recalibration, not drive-by."""
-    from join_example_spark.operators.ann_graph import adaptive_nsw_dials
-
-    assert adaptive_nsw_dials(2000) == (16, 3, 32, 8)
-    d, p, b, r = adaptive_nsw_dials(2001)
-    assert (p, b, r) == (4, 64, 12)  # full 16k-tier secondaries immediately
-    assert d == 17  # degree interpolates the log-slope, not a jump
-    assert adaptive_nsw_dials(16_000) == (24, 4, 64, 12)
-    assert adaptive_nsw_dials(64_000) == (30, 5, 128, 16)
-    assert adaptive_nsw_dials(128_000) == (32, 5, 128, 16)
-
-
 def test_fanout_repartition_spreads_small_scans_and_noops_at_scale(spark):
     """Round-15 single-split finding: every fixture table is one parquet
     split, so the first (often heaviest) stage of a plan ran on ONE core.

@@ -11,6 +11,8 @@ observing the set stutter. These tests pin (a) the round saving and
 
 from __future__ import annotations
 
+import pytest
+
 
 def _counting_small_star(g, calls):
     orig = g._small_star
@@ -77,6 +79,18 @@ def test_star_cc_witness_multi_parent_merges(spark):
     assert got == {(1, 1), (2, 1), (5, 1)}
 
 
+def _count_nodes(plan, name: str) -> int:
+    """Physical-plan nodes whose nodeName() is ``name``, counted by walking
+    the JVM tree (through the AQE wrapper) rather than matching printed
+    plan text."""
+    if plan.nodeName() == "AdaptiveSparkPlan":
+        plan = plan.executedPlan()
+    kids = plan.children()
+    return int(plan.nodeName() == name) + sum(
+        _count_nodes(kids.apply(i), name) for i in range(kids.size())
+    )
+
+
 def test_kmeans_lloyd_stats_single_assignment_pass(spark):
     """Round-16 fuse: the Lloyd audit derives stats AND shift from one
     (cell, pos) aggregate, so the broadcast-assign + row_number window
@@ -89,13 +103,33 @@ def test_kmeans_lloyd_stats_single_assignment_pass(spark):
         ["vec_id", "embedding"],
     )
     df = kmeans_lloyd_stats(emb, n_centroids=2)
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    # one Window NODE (WindowGroupLimit helper lines also mention
-    # row_number(), so count the node marker, not the function name)
-    assert plan.count("Window [row_number()") == 1, plan
+    plan = df._jdf.queryExecution().executedPlan()
+    # one Window NODE (WindowGroupLimit is a separate node name)
+    assert _count_nodes(plan, "Window") == 1, plan.toString()
     # and the audit still carries all four columns
     rows = {r.cell: r for r in df.collect()}
     assert rows and all(
         r.n_members >= 1 and r.avg_sim is not None and r.centroid_shift is not None
         for r in rows.values()
     )
+
+
+def test_kmeans_ragged_embedding_raises(spark):
+    """The fused audit re-reads each cell's csim sum as MAX over its pos
+    groups, which is the member sum only for fixed-dim vectors. A ragged
+    cell must fail the action rather than return a wrong avg_sim."""
+    from pyspark.errors import PySparkException
+
+    from join_example_spark.operators.similarity import (
+        kmeans_lloyd_rounds,
+        kmeans_lloyd_stats,
+    )
+
+    rows = [(0, [1.0, 0.0]), (1, [0.0, 1.0]), (2, [1.0, 0.0]), (3, [1.0])]
+    emb = spark.createDataFrame(rows, "vec_id LONG, embedding ARRAY<FLOAT>")
+    for df in (
+        kmeans_lloyd_stats(emb, n_centroids=2),
+        kmeans_lloyd_rounds(emb, n_centroids=2, rounds=1),
+    ):
+        with pytest.raises(PySparkException, match="ragged"):
+            df.collect()

@@ -19,10 +19,10 @@ Env:    SPARK_GRAFT_PROBE_COPIES=8,64    tier multipliers
                                          (the top-T selection needs p^2
                                          >= T candidates)
 
-Protocol identical to tools/adaptive_recall_tier.py (same ground truth:
-exact rounded dots of a 1% probe sample vs the corpus at sim >= 0.35;
-recall via cell-set overlap without materializing the join; work audit
-via the cell-occupancy histogram).
+Protocol identical to the adaptive-dial tier probe of SCALE.md §3.10
+(same ground truth: exact rounded dots of a 1% probe sample vs the corpus
+at sim >= 0.35; recall via cell-set overlap without materializing the
+join; work audit via the cell-occupancy histogram).
 """
 
 from __future__ import annotations

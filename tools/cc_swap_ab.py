@@ -43,26 +43,29 @@ def draw(q):
     return round(time.perf_counter() - t0, 3)
 
 
-for q in ("q_llm_cluster_dbscan", "q_llm_cluster_quality"):
-    # result equality check once
-    use("A")
-    rows_a = sorted(map(tuple, reg[q].fn(spark, SF).collect()))
-    use("B")
-    rows_b = sorted(map(tuple, reg[q].fn(spark, SF).collect()))
-    print(q, "rows_equal", rows_a == rows_b, len(rows_a), flush=True)
-    # interleave: discard one warm each, then A,B,A,B then B,A,B,A
-    use("A"); draw(q)
-    use("B"); draw(q)
-    res = {"A": [], "B": []}
-    for order in ("AB", "BA"):
-        blk = {"A": [], "B": []}
-        for _ in range(3):
-            for v in order:
-                use(v)
-                blk[v].append(draw(q))
-        print(q, order, "A(plain)", blk["A"], "B(star)", blk["B"],
-              "medA", statistics.median(blk["A"]), "medB", statistics.median(blk["B"]), flush=True)
-        res["A"] += blk["A"]; res["B"] += blk["B"]
-    print(q, "OVERALL medA", statistics.median(res["A"]), "medB", statistics.median(res["B"]), flush=True)
-g.connected_components, g.connected_components_star = plain, star
-spark.stop()
+try:
+    for q in ("q_llm_cluster_dbscan", "q_llm_cluster_quality"):
+        # result equality check once
+        use("A")
+        rows_a = sorted(map(tuple, reg[q].fn(spark, SF).collect()))
+        use("B")
+        rows_b = sorted(map(tuple, reg[q].fn(spark, SF).collect()))
+        print(q, "rows_equal", rows_a == rows_b, len(rows_a), flush=True)
+        # interleave: discard one warm each, then A,B,A,B then B,A,B,A
+        use("A"); draw(q)
+        use("B"); draw(q)
+        res = {"A": [], "B": []}
+        for order in ("AB", "BA"):
+            blk = {"A": [], "B": []}
+            for _ in range(3):
+                for v in order:
+                    use(v)
+                    blk[v].append(draw(q))
+            print(q, order, "A(plain)", blk["A"], "B(star)", blk["B"],
+                  "medA", statistics.median(blk["A"]), "medB", statistics.median(blk["B"]), flush=True)
+            res["A"] += blk["A"]; res["B"] += blk["B"]
+        print(q, "OVERALL medA", statistics.median(res["A"]), "medB", statistics.median(res["B"]), flush=True)
+finally:
+    # restore BOTH module names even when a draw or the check raises
+    g.connected_components, g.connected_components_star = plain, star
+    spark.stop()
