@@ -62,11 +62,15 @@ def connected_components(
     all_nodes = nodes.select(F.col(id_col).alias("id"))
     # Only edge-touched nodes participate in propagation — singletons (the
     # bulk of a dedup corpus) are their own component by definition, so the
-    # iterative working set shrinks from |V| to |V_active|.
-    active = sym.select(F.col("src").alias("id")).distinct().localCheckpoint(eager=True)
-    labels = active.select("id", F.col("id").alias("label")).localCheckpoint(eager=True)
-    if labels.isEmpty():  # no edges at all — everything is a singleton
-        return all_nodes.select("id", F.col("id").alias("cluster_id"))
+    # iterative working set shrinks from |V| to |V_active|. With no edges
+    # the first round changes nothing and returns every node as a singleton.
+    labels = (
+        sym.select(F.col("src").alias("id"))
+        .distinct()
+        .select("id", F.col("id").alias("label"))
+        .localCheckpoint(eager=True)
+    )
+    active = labels.select("id")
 
     # Convergence witness: exact per-round changed-row count (works for any
     # id type — a numeric label-sum would crash on string ids under ANSI
@@ -80,10 +84,11 @@ def connected_components(
             .groupBy("id")
             .agg(F.min("label").alias("nbr_label"))
         )
-        # ONE Spark job per round (round 8 — the CC cost was profiled as
-        # orchestration-bound, not partition-bound): the LAZY localCheckpoint
-        # is materialized by the same action that computes the convergence
-        # witness, replacing the eager-checkpoint job + count job pair.
+        # Not lazy under AQE: localCheckpoint(eager=False) submits every
+        # shuffle and broadcast stage of the plan when it is called
+        # (measured: 6 jobs here per round, plus 2 for the count). What it
+        # saves over an eager checkpoint is the extra full-result job; the
+        # count below then reads the materialized partitions.
         new_labels = (
             labels.withColumnRenamed("label", "prev_label")
             .join(nbr_min, "id", "left")
@@ -165,11 +170,12 @@ def connected_components_star(
 
     Per round: two groupBy shuffles + two distincts over the current pair
     set; pair-set size is bounded by the symmetrized edge count and only
-    shrinks toward the star forest. Round 8 (the CC family cost was
-    profiled orchestration-bound): each round is ONE Spark job — a lazy
-    localCheckpoint materialized by the same scalar aggregate that
-    returns the convergence witness; only a 3-field row reaches the
-    driver per round.
+    shrinks toward the star forest. Each round checkpoints the new pair
+    set lazily and takes one scalar aggregate as its convergence witness;
+    only a 3-field row reaches the driver per round. Under AQE the lazy
+    checkpoint still runs every shuffle and broadcast stage of the round
+    as jobs when it is called — it saves only the eager checkpoint's
+    extra full-result job.
 
     Convergence witness (round 16 — replaces the consecutive-iterate
     set-equality test): the iteration's fixpoints are EXACTLY the
@@ -195,27 +201,16 @@ def connected_components_star(
     round's checkpoint is released immediately.
     """
     all_nodes = nodes.select(F.col(id_col).alias("id"))
-    # LAZY checkpoint materialized by the emptiness count below (round 16,
-    # the round-8 job-fold pattern: eager-checkpoint + count was two
-    # driver-synchronized jobs; the count references pairs once, so it
-    # materializes the checkpoint itself — one job).
+    # Checkpointed because round 1 references the input pairs several
+    # times. An empty pair set needs no gate: it converges in round 1 (the
+    # witness aggregate over no rows has all_down NULL) and every node
+    # comes back as a singleton.
     pairs = (
         edges.select(F.col(src_col).alias("u"), F.col(dst_col).alias("v"))
         .where(F.col("u") != F.col("v"))
         .distinct()
         .localCheckpoint(eager=False)
     )
-    # Used only AFTER convergence (roots/singleton attach) — lazy checkpoint
-    # so no up-front job; first post-loop use materializes it once.
-    active = (
-        pairs.select("u")
-        .union(pairs.select(F.col("v").alias("u")))
-        .distinct()
-        .select(F.col("u").alias("id"))
-        .localCheckpoint(eager=False)
-    )
-    if pairs.count() == 0:
-        return all_nodes.select("id", F.col("id").alias("cluster_id"))
 
     # One (node, role) row per pair endpoint via a generator — NOT a
     # two-branch union, which would execute the (lazily checkpointed)
@@ -238,8 +233,8 @@ def connected_components_star(
     )
     for _ in range(max_iter):
         pairs = _small_star(_large_star(pairs)).localCheckpoint(eager=False)
-        # ONE job per round: this scalar aggregate materializes the lazy
-        # checkpoint AND returns the star-forest witness fields.
+        # The round's fixpoint action: reads the checkpointed pairs and
+        # returns the star-forest witness fields.
         w = (
             pairs.select(_roles.alias("r"))
             .select("r.*")
@@ -263,14 +258,18 @@ def connected_components_star(
             and w["n_multi"] == 0
             and (w["all_down"] is None or w["all_down"] == 1)
         ):
-            # Star forest: every non-root points directly at its root.
+            # Star forest: every non-root (u) points directly at its root
+            # (v), and no root is a child, so the converged pairs name every
+            # edge-touched node: active = u ∪ v, roots = the distinct v.
             non_roots = pairs.select(
                 F.col("u").alias("id"), F.col("v").alias("cluster_id")
             )
             roots = (
-                active.join(non_roots.select("id"), "id", "left_anti")
+                pairs.select(F.col("v").alias("id"))
+                .distinct()
                 .select("id", F.col("id").alias("cluster_id"))
             )
+            active = pairs.select(F.explode(F.array("u", "v")).alias("id"))
             singletons = all_nodes.join(active, "id", "left_anti").select(
                 "id", F.col("id").alias("cluster_id")
             )

@@ -16,10 +16,15 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 #: Sequential left-fold dot product in DOUBLE — deterministic evaluation
-#: order, identical expression shape on the oracle side.
+#: order, identical fold shape on the oracle side. Vectors of different
+#: lengths raise instead of folding to NULL (ZIP_WITH pads the shorter side
+#: with NULL, which would rank as a NULL similarity); a NULL array still
+#: yields NULL (``array_size`` of NULL is NULL under any sizeOfNull mode).
 DOT_FOLD_SQL = (
-    "AGGREGATE(ZIP_WITH({a}, {b}, (x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)),"
-    " CAST(0.0 AS DOUBLE), (acc, v) -> acc + v)"
+    "CASE WHEN array_size({a}) <> array_size({b})"
+    " THEN raise_error('ragged vectors: dot product operands differ in length')"
+    " ELSE AGGREGATE(ZIP_WITH({a}, {b}, (x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)),"
+    " CAST(0.0 AS DOUBLE), (acc, v) -> acc + v) END"
 )
 
 #: Sequential left-fold SQUARED L2 distance in DOUBLE — the PQ assignment
@@ -51,8 +56,8 @@ def _static_unroll(kind: str, dim: int) -> str:
     with the same ``CAST(0.0 AS DOUBLE)`` seed (kept so a leading ``-0.0``
     term cannot flip the sign of a zero result), so every partial sum is
     the identical IEEE operation sequence. Arrays whose runtime size is
-    not ``dim`` (or NULL) take the ELSE branch — the original fold — so
-    semantics are unchanged for every input.
+    not ``dim`` (or NULL) take the ELSE branch — the original fold, ragged
+    guard included — so semantics are unchanged for every input.
 
     USE SPARINGLY — this is NOT the default template, on measurement (the
     round-7 full-suite experiment, SCALE.md §3.10): the big tree costs

@@ -2,11 +2,17 @@
 
 Design notes (100 TB posture):
 
-- All reads are plain ``spark.read.parquet`` — the vectorized parquet
-  reader, predicate pushdown, and column pruning apply untouched because
+- All reads are ``spark.read.parquet`` — the vectorized parquet reader,
+  predicate pushdown, and column pruning apply untouched because
   normalization below is expressed as Catalyst column expressions, never
   Python UDFs.
-- No schema inference beyond the parquet footer (deterministic).
+- No schema inference beyond the parquet footer (deterministic). A plain
+  ``spark.read.parquet`` costs one Spark job per call (footer inference
+  runs as a job even for a single file), so :func:`_read_parquet` infers
+  each local file's schema once and hands it back on later reads — those
+  fire no job. The cache is keyed on the file's identity (real path,
+  inode, size, mtime) and the session confs that shape inference, so a
+  rewritten file or a changed conf infers again.
 - ``events.ts`` has shipped under TWO encodings across fixture
   generations, so the reader dispatches on the arriving dtype instead of
   hard-coding either (a hard-coded recipe broke 30 queries in round 2):
@@ -97,6 +103,41 @@ def probe_stream_schema(
     return reader.parquet(source_dir.rstrip("/")).schema
 
 
+#: Session confs that change the schema parquet inference produces.
+_INFERENCE_CONFS: tuple[str, ...] = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+)
+
+#: (real path, inode, size, mtime_ns, inference conf values) -> schema.
+_SCHEMA_CACHE: dict[tuple, StructType] = {}
+
+
+def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` that infers a local file's schema once.
+
+    The first read of a regular file infers as usual and caches the
+    schema; later reads pass it back via ``spark.read.schema`` and so fire
+    no inference job. Directories, URIs and missing paths take the plain
+    read, so their behaviour and errors are Spark's own.
+    """
+    if not os.path.isfile(path):
+        return spark.read.parquet(path)
+    st = os.stat(path)
+    key = (
+        os.path.realpath(path), st.st_ino, st.st_size, st.st_mtime_ns,
+        tuple(spark.conf.get(k, None) for k in _INFERENCE_CONFS),
+    )
+    schema = _SCHEMA_CACHE.get(key)
+    if schema is not None:
+        return spark.read.schema(schema).parquet(path)
+    df = spark.read.parquet(path)
+    _SCHEMA_CACHE[key] = df.schema
+    return df
+
+
 def read_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Read the ``events`` stream table, normalizing ``ts``.
 
@@ -105,7 +146,7 @@ def read_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     columns untouched.
     """
     ensure_session_confs(spark)
-    raw = spark.read.parquet(_path(sf_dir, "events"))
+    raw = _read_parquet(spark, _path(sf_dir, "events"))
     return normalize_event_ts(raw)
 
 
@@ -114,7 +155,7 @@ def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name == "events":
         return read_events(spark, sf_dir)
     ensure_session_confs(spark)
-    return spark.read.parquet(_path(sf_dir, name))
+    return _read_parquet(spark, _path(sf_dir, name))
 
 
 #: (sf_dir, table) -> exact row count, from parquet footer metadata.

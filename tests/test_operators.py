@@ -242,6 +242,18 @@ def test_connected_components_raises_without_convergence(spark):
         connected_components(nodes, edges, max_iter=3)
 
 
+@pytest.mark.parametrize("loop", ["connected_components", "connected_components_star"])
+def test_connected_components_without_edges_are_singletons(spark, loop):
+    """With no edges the first round finds the fixpoint and every node is
+    its own component."""
+    from join_example_spark.operators import graph
+
+    nodes = spark.createDataFrame([(1,), (2,), (3,)], "id BIGINT")
+    edges = spark.createDataFrame([], "src BIGINT, dst BIGINT")
+    got = {(r.id, r.cluster_id) for r in getattr(graph, loop)(nodes, edges).collect()}
+    assert got == {(1, 1), (2, 2), (3, 3)}
+
+
 def test_connected_components_star_matches_propagation(spark):
     from join_example_spark.operators.graph import (
         connected_components,

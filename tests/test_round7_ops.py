@@ -23,10 +23,11 @@ from join_example_spark.operators.similarity import (
 )
 
 
-def _vec_rows(dims, per_dim=40, seed=11):
+def _vec_rows(dims, per_dim=40, seed=11, ragged=True):
     """Adversarial float32 vectors: random values, exact zeros, negative
-    zeros, subnormal-ish tiny values, mixed signs — per listed dim plus a
-    ragged (a-len != b-len) case per dim to force the ELSE/fold branch."""
+    zeros, subnormal-ish tiny values, mixed signs — per listed dim plus
+    (when ``ragged``) an a-len != b-len case per dim to force the ELSE/fold
+    branch."""
     rng = np.random.default_rng(seed)
     rows = []
     rid = 0
@@ -40,10 +41,13 @@ def _vec_rows(dims, per_dim=40, seed=11):
             a[rng.integers(0, d)] = np.float32(1e-38)
             rows.append((rid, [float(x) for x in a], [float(x) for x in b]))
             rid += 1
-        # ragged pair: zip_with pads with NULL -> NULL result both paths
+        # ragged pair: the squared-L2 fold gives NULL on both paths (zip_with
+        # pads with NULL); the dot fold raises (test below). Drawn either way
+        # so the other rows see the same random stream.
         a = rng.normal(size=d).astype(np.float32)
         b = rng.normal(size=max(1, d - 3)).astype(np.float32)
-        rows.append((rid, [float(x) for x in a], [float(x) for x in b]))
+        if ragged:
+            rows.append((rid, [float(x) for x in a], [float(x) for x in b]))
         rid += 1
     # all-negative-zero vectors: the case the CAST(0.0) seed exists for
     for d in dims:
@@ -62,7 +66,7 @@ def _vec_rows(dims, per_dim=40, seed=11):
     ],
 )
 def test_unrolled_templates_bit_identical_to_fold(spark, tmpl_new, tmpl_old):
-    rows = _vec_rows(dims=(7, 16, 32, 64))
+    rows = _vec_rows(dims=(7, 16, 32, 64), ragged=tmpl_old is D2_FOLD_SQL)
     df = spark.createDataFrame(rows, "rid long, va array<float>, vb array<float>")
     out = df.select(
         F.expr(tmpl_new.format(a="va", b="vb")).alias("new"),
@@ -246,3 +250,31 @@ def test_unrolled_dot_handles_null_arrays(spark):
     )
     rows = out.collect()
     assert all(r.new is None and r.old is None for r in rows)
+
+
+def test_unrolled_dot_raises_on_ragged_vectors(spark):
+    """A size mismatch takes the unrolled template's ELSE branch, which is
+    the guarded fold: it must fail the action, not return a NULL dot."""
+    from pyspark.errors import PySparkException
+
+    df = spark.createDataFrame(
+        [(1, [1.0, 0.0], [1.0, 0.0]), (2, [1.0, 0.0], [1.0])],
+        "rid long, va array<float>, vb array<float>",
+    )
+    with pytest.raises(PySparkException, match="ragged"):
+        df.select(F.expr(dot_sql_for(2).format(a="va", b="vb"))).collect()
+
+
+def test_cosine_topk_raises_on_ragged_vectors(spark):
+    """A ragged vector in a block used to rank as a NULL-similarity
+    neighbour (``(0, 2, sim=None, rn=2)``); it must fail the action."""
+    from pyspark.errors import PySparkException
+
+    from join_example_spark.operators.similarity import cosine_topk
+
+    emb = spark.createDataFrame(
+        [(0, [1.0, 0.0]), (1, [0.9, 0.1]), (2, [1.0])],
+        "vec_id long, embedding array<float>",
+    ).withColumn("label", F.lit(0))
+    with pytest.raises(PySparkException, match="ragged"):
+        cosine_topk(emb, k=2, probe_pred=None).collect()
