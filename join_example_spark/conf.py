@@ -45,6 +45,29 @@ SESSION_CONFS: dict[str, str] = {
     # row on the BM25/hybrid token paths.
     "spark.sql.optimizer.excludedRules":
         "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate",
+    # Streaming state: one RocksDB store per stateful partition, committed
+    # by changelog. The HDFS-backed default keeps FOUR stores per
+    # stream-stream join partition (keyToNumValues + keyWithIndexToValue
+    # per side), and every trigger commits each one as a checksummed delta
+    # file that its task blocks on until closed. Join state format v3
+    # (RocksDB-only) puts the four join stores into column families of ONE
+    # store; changelog checkpointing makes a commit append the version's
+    # changes instead of uploading a snapshot. RocksDB alone, with four
+    # stores and no changelog, measured slower than the default. Measured
+    # on the open-loop interval join (perfbench stream_interval_join,
+    # local[2], 4 vCPUs, seed 7) with these three entries: the summed
+    # per-trigger state commit (stateOperators commitTimeMs, both join
+    # tasks) fell from 280-419 ms to 85-128 ms, addBatch from 478-649 ms
+    # to 430-532 ms. State lives off-heap, so it is not bounded by the JVM
+    # heap. Batch paths never read these keys. An
+    # existing checkpoint is safe: Spark records the provider and
+    # join.stateFormatVersion in the checkpoint's offset log and restores
+    # them on restart, so an HDFS-backed/v2 checkpoint resumes on its own
+    # stores (pinned in tests/test_streaming.py).
+    "spark.sql.streaming.stateStore.providerClass":
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
+    "spark.sql.streaming.join.stateFormatVersion": "3",
+    "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled": "true",
 }
 
 

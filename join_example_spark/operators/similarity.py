@@ -29,12 +29,15 @@ DOT_FOLD_SQL = (
 
 #: Sequential left-fold SQUARED L2 distance in DOUBLE — the PQ assignment
 #: metric (subvectors are not unit-normalized, so dot is the wrong metric
-#: there). Same determinism contract as DOT_FOLD_SQL.
+#: there). Same determinism and ragged-vector contract as DOT_FOLD_SQL: a
+#: NULL distance would drop the row out of an argmin silently.
 D2_FOLD_SQL = (
-    "AGGREGATE(ZIP_WITH({a}, {b},"
+    "CASE WHEN array_size({a}) <> array_size({b})"
+    " THEN raise_error('ragged vectors: squared-L2 operands differ in length')"
+    " ELSE AGGREGATE(ZIP_WITH({a}, {b},"
     " (x, y) -> (CAST(x AS DOUBLE) - CAST(y AS DOUBLE))"
     " * (CAST(x AS DOUBLE) - CAST(y AS DOUBLE))),"
-    " CAST(0.0 AS DOUBLE), (acc, v) -> acc + v)"
+    " CAST(0.0 AS DOUBLE), (acc, v) -> acc + v) END"
 )
 
 

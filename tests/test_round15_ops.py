@@ -95,19 +95,21 @@ def test_env_probe_runs_and_matches_code_assumptions():
     """tools/env_probe.py (VERDICT r14 task 5) must run cleanly and its
     findings must agree with the code paths the engine actually takes:
     streaming uses applyInPandasWithState iff transformWithState is
-    unusable, and demos use file sources iff no Kafka jar is present.
-    If this test ever fails on those two asserts, the ENVIRONMENT
-    changed — re-evaluate the gated paths, don't patch the test."""
+    unusable, demos use file sources iff no Kafka jar is present, and the
+    streaming state store (RocksDB, conf.SESSION_CONFS) opens. If this
+    test ever fails on those asserts, the ENVIRONMENT changed —
+    re-evaluate the gated paths, don't patch the test."""
     from tools.env_probe import run_probes
 
     doc = run_probes()
     assert set(doc) == {
-        "probed_at", "reference", "protobuf", "kafka_jar", "network",
-        "versions",
+        "probed_at", "reference", "protobuf", "kafka_jar",
+        "rocksdb_state_store", "network", "versions",
     }
     # engine-relevant invariants the code is currently shaped around:
     assert doc["protobuf"]["transform_with_state_usable"] is False
     assert doc["kafka_jar"]["kafka_connector_present"] is False
+    assert doc["rocksdb_state_store"]["opens"] is True, doc["rocksdb_state_store"]
     # reference probe is structural (empty or not, it must report)
     assert isinstance(doc["reference"].get("file_count", 0), int)
     assert doc["versions"]["pyspark"].startswith("4.")

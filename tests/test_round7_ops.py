@@ -23,11 +23,11 @@ from join_example_spark.operators.similarity import (
 )
 
 
-def _vec_rows(dims, per_dim=40, seed=11, ragged=True):
+def _vec_rows(dims, per_dim=40, seed=11):
     """Adversarial float32 vectors: random values, exact zeros, negative
-    zeros, subnormal-ish tiny values, mixed signs — per listed dim plus
-    (when ``ragged``) an a-len != b-len case per dim to force the ELSE/fold
-    branch."""
+    zeros, subnormal-ish tiny values, mixed signs — per listed dim. The
+    unrolled templates' ELSE branch is reached by the dims other than the
+    template's own; a length mismatch raises in both folds (tests below)."""
     rng = np.random.default_rng(seed)
     rows = []
     rid = 0
@@ -41,14 +41,6 @@ def _vec_rows(dims, per_dim=40, seed=11, ragged=True):
             a[rng.integers(0, d)] = np.float32(1e-38)
             rows.append((rid, [float(x) for x in a], [float(x) for x in b]))
             rid += 1
-        # ragged pair: the squared-L2 fold gives NULL on both paths (zip_with
-        # pads with NULL); the dot fold raises (test below). Drawn either way
-        # so the other rows see the same random stream.
-        a = rng.normal(size=d).astype(np.float32)
-        b = rng.normal(size=max(1, d - 3)).astype(np.float32)
-        if ragged:
-            rows.append((rid, [float(x) for x in a], [float(x) for x in b]))
-        rid += 1
     # all-negative-zero vectors: the case the CAST(0.0) seed exists for
     for d in dims:
         rows.append((rid, [-0.0] * d, [0.0] * d))
@@ -66,7 +58,7 @@ def _vec_rows(dims, per_dim=40, seed=11, ragged=True):
     ],
 )
 def test_unrolled_templates_bit_identical_to_fold(spark, tmpl_new, tmpl_old):
-    rows = _vec_rows(dims=(7, 16, 32, 64), ragged=tmpl_old is D2_FOLD_SQL)
+    rows = _vec_rows(dims=(7, 16, 32, 64))
     df = spark.createDataFrame(rows, "rid long, va array<float>, vb array<float>")
     out = df.select(
         F.expr(tmpl_new.format(a="va", b="vb")).alias("new"),
@@ -263,6 +255,31 @@ def test_unrolled_dot_raises_on_ragged_vectors(spark):
     )
     with pytest.raises(PySparkException, match="ragged"):
         df.select(F.expr(dot_sql_for(2).format(a="va", b="vb"))).collect()
+
+
+def test_unrolled_d2_raises_on_ragged_vectors(spark):
+    """The squared-L2 fold has the dot fold's guard: a size mismatch fails
+    the action (a NULL distance would drop the row out of an argmin), on
+    the unrolled template's ELSE branch and on the plain fold alike, while
+    a NULL array still yields a NULL distance."""
+    from pyspark.errors import PySparkException
+
+    df = spark.createDataFrame(
+        [(1, [1.0, 0.0], [1.0, 0.0]), (2, [1.0, 0.0], [1.0])],
+        "rid long, va array<float>, vb array<float>",
+    )
+    for tmpl in (d2_sql_for(2), D2_FOLD_SQL):
+        with pytest.raises(PySparkException, match="ragged"):
+            df.select(F.expr(tmpl.format(a="va", b="vb"))).collect()
+    nulls = spark.createDataFrame(
+        [(1, None, [1.0, 2.0]), (2, [1.0, 2.0], None)],
+        "rid long, va array<float>, vb array<float>",
+    )
+    got = nulls.select(
+        F.expr(d2_sql_for(2).format(a="va", b="vb")).alias("new"),
+        F.expr(D2_FOLD_SQL.format(a="va", b="vb")).alias("old"),
+    ).collect()
+    assert all(r.new is None and r.old is None for r in got)
 
 
 def test_cosine_topk_raises_on_ragged_vectors(spark):

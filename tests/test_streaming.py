@@ -22,6 +22,27 @@ def _final(stream_df, tmp_path, sub, mode="append"):
     return demos.run_to_completion(stream_df, str(tmp_path / sub), mode)
 
 
+def _write_events(path, rows):
+    """Write ``(event_id, ts_seconds, user_id, event_type)`` rows as raw
+    events parquet (int64-ns ts, the nanosAsLong representation)."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    pq.write_table(
+        pa.table(
+            {
+                "event_id": pa.array([r[0] for r in rows], pa.int64()),
+                "ts": pa.array([r[1] * 1_000_000_000 for r in rows], pa.int64()),
+                "user_id": pa.array([r[2] for r in rows], pa.int64()),
+                "event_type": pa.array([r[3] for r in rows], pa.string()),
+                "value": pa.array([1.0] * len(rows), pa.float64()),
+                "props": pa.array(["{}"] * len(rows), pa.string()),
+            }
+        ),
+        path,
+    )
+
+
 @pytest.mark.streaming
 def test_tumbling_stream_equals_batch(spark, tmp_path):
     # complete mode: the bounded input's trailing windows never pass the
@@ -48,15 +69,12 @@ def test_stream_static_join_equals_batch(spark, tmp_path):
     assert not problems, problems
 
 
-@pytest.mark.streaming
-def test_stream_stream_interval_join_equals_batch(spark, tmp_path):
-    streamed = _final(
-        demos.stream_stream_interval_join(spark, SF_SMOKE), tmp_path, "ssj"
-    )
-    # Batch twin: the same interval join at 10 minutes on the bounded table.
+def _interval_join_batch(spark, sf_dir):
+    """Batch twin of the interval-join demo: the same interval join at 10
+    minutes on the bounded table."""
     from join_example_spark.sources.readers import read_table
 
-    events = read_table(spark, SF_SMOKE, "events")
+    events = read_table(spark, sf_dir, "events")
     views = events.where(F.col("event_type") == "view").select(
         F.col("event_id").alias("view_id"),
         F.col("user_id").alias("l_user"),
@@ -67,14 +85,160 @@ def test_stream_stream_interval_join_equals_batch(spark, tmp_path):
         F.col("user_id").alias("r_user"),
         F.col("ts").alias("purchase_ts"),
     )
-    batch = views.join(
+    return views.join(
         purchases,
         (F.col("l_user") == F.col("r_user"))
         & (F.col("purchase_ts") >= F.expr("view_ts - INTERVAL 10 MINUTES"))
         & (F.col("purchase_ts") <= F.expr("view_ts + INTERVAL 10 MINUTES")),
     ).select("view_id", "purchase_id", "view_ts", "purchase_ts")
+
+
+@pytest.mark.streaming
+def test_stream_stream_interval_join_equals_batch(spark, tmp_path):
+    streamed = _final(
+        demos.stream_stream_interval_join(spark, SF_SMOKE), tmp_path, "ssj"
+    )
+    batch = _interval_join_batch(spark, SF_SMOKE)
     problems = compare_frames(streamed.toPandas(), batch.toPandas())
     assert not problems, problems
+
+
+_PROVIDER = "spark.sql.streaming.stateStore.providerClass"
+_JOIN_FORMAT = "spark.sql.streaming.join.stateFormatVersion"
+_HDFS = "org.apache.spark.sql.execution.streaming.state.HDFSBackedStateStoreProvider"
+_ROCKSDB = "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+_V2_STORES = {
+    f"{side}-{kind}"
+    for side in ("left", "right")
+    for kind in ("keyToNumValues", "keyWithIndexToValue")
+}
+
+
+def _state_stores(checkpoint):
+    """{partition: {store dir relative to the partition dir: version files}}
+    for the checkpoint's one stateful operator. A store dir is any dir that
+    holds ``N.delta`` / ``N.snapshot`` (HDFS-backed) or ``N.changelog`` /
+    ``N.zip`` (RocksDB) files."""
+    import os
+    import re
+
+    version_file = re.compile(r"^\d+\.(delta|snapshot|changelog|zip)$")
+    root = os.path.join(checkpoint, "state", "0")
+    out = {}
+    for part in sorted(p for p in os.listdir(root) if p.isdigit()):
+        stores = {}
+        for dirpath, _dirs, files in os.walk(os.path.join(root, part)):
+            names = {f for f in files if version_file.match(f)}
+            if names:
+                stores[os.path.relpath(dirpath, os.path.join(root, part))] = names
+        out[int(part)] = stores
+    return out
+
+
+@pytest.mark.streaming
+def test_interval_join_state_is_one_rocksdb_store_per_partition(spark, tmp_path):
+    """conf.SESSION_CONFS: join state format v3 keeps ONE store per state
+    partition (the partition dir itself; v2 keeps four sub-stores), and
+    changelog checkpointing commits each version as ``N.changelog``."""
+    ck = str(tmp_path / "ck")
+    demos.run_to_completion(demos.stream_stream_interval_join(spark, SF_SMOKE), ck)
+    stores = _state_stores(ck)
+    assert len(stores) == int(spark.conf.get("spark.sql.shuffle.partitions"))
+    for part, by_dir in stores.items():
+        assert list(by_dir) == ["."], (part, by_dir)
+        assert any(f.endswith(".changelog") for f in by_dir["."]), (part, by_dir)
+
+
+@pytest.mark.streaming
+def test_interval_join_resumes_hdfs_v2_checkpoint(spark, tmp_path):
+    """A checkpoint written on the HDFS-backed provider with join state
+    format v2 resumes after ensure_session_confs has switched the session
+    to RocksDB/v3: Spark restores the provider and format from the
+    checkpoint, so the restarted query keeps its four v2 stores and writes
+    ``.delta`` files to them, and the two runs together equal the batch
+    twin."""
+    import pandas as pd
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    events = pq.read_table(f"{SF_SMOKE}/events.parquet")
+    events = events.take(pc.sort_indices(events, [("ts", "ascending"), ("event_id", "ascending")]))
+    half = events.num_rows // 2
+    src = tmp_path / "src"
+    src.mkdir()
+    pq.write_table(events.slice(0, half), src / "events.parquet")
+    ck = str(tmp_path / "ck")
+    session = spark.newSession()
+
+    joined = demos.stream_stream_interval_join(session, str(src))
+    session.conf.set(_PROVIDER, _HDFS)
+    session.conf.set(_JOIN_FORMAT, "2")
+    first = demos.run_to_completion(joined, ck)
+    before = _state_stores(ck)
+    assert all(set(d) == _V2_STORES for d in before.values()), before
+
+    pq.write_table(events.slice(half), src / "events_part2.parquet")
+    joined = demos.stream_stream_interval_join(session, str(src))
+    assert (session.conf.get(_PROVIDER), session.conf.get(_JOIN_FORMAT)) == (_ROCKSDB, "3")
+    second = demos.run_to_completion(joined, ck)
+    after = _state_stores(ck)
+
+    def last_delta(names):
+        return max(int(n.split(".")[0]) for n in names if n.endswith(".delta"))
+
+    for part, by_dir in after.items():
+        assert set(by_dir) == _V2_STORES, (part, by_dir)
+        for store, names in by_dir.items():
+            assert all(n.endswith((".delta", ".snapshot")) for n in names), names
+            assert last_delta(names) > last_delta(before[part][store]), (part, store)
+    streamed = pd.concat([first.toPandas(), second.toPandas()], ignore_index=True)
+    problems = compare_frames(streamed, _interval_join_batch(spark, SF_SMOKE).toPandas())
+    assert not problems, problems
+
+
+@pytest.mark.streaming
+def test_interval_join_state_falls_back_after_eviction(spark, tmp_path):
+    """Per-trigger progress pins the interval join's bounded state on the
+    RocksDB store: 20 buffered rows stay in state while the watermark is
+    within their 10-minute bound, and once a wave 5 h later moves the
+    watermark past them they are evicted, leaving only the new wave. The
+    planted late view (1 h behind the restored watermark) is counted by
+    ``numRowsDroppedByWatermark`` exactly."""
+    t0 = 1_700_000_000
+    src = tmp_path / "src"
+    src.mkdir()
+    # Wave 1: a view and a purchase 60 s apart for each of 10 users, all
+    # inside 5 minutes -> 10 matches, no row evictable.
+    _write_events(src / "events.parquet", [
+        (2 * u + k, t0 + 15 * u + 60 * k, u, ("view", "purchase")[k])
+        for u in range(10) for k in range(2)
+    ])
+    ck = str(tmp_path / "ck")
+    first, progress1 = demos.run_with_progress(
+        demos.stream_stream_interval_join(spark, str(src)), ck
+    )
+    # Wave 2, 5 h later: one matching pair plus one view 1 h behind the
+    # watermark that wave 1 left (max ts - 10 min).
+    _write_events(src / "events_part2.parquet", [
+        (100, t0 + 18_000, 0, "view"),
+        (101, t0 + 18_030, 0, "purchase"),
+        (102, t0 - 3_600, 1, "view"),
+    ])
+    second, progress2 = demos.run_with_progress(
+        demos.stream_stream_interval_join(spark, str(src)), ck
+    )
+
+    def ops(progress):
+        return [op for p in progress for op in p.stateOperators]
+
+    assert (first.count(), second.count()) == (10, 1)
+    assert ops(progress1)[-1].numRowsTotal == 20
+    assert ops(progress2)[-1].numRowsTotal == 2
+    assert sum(op.numRowsRemoved for op in ops(progress2)) >= 20
+    assert sum(op.numRowsDroppedByWatermark for op in ops(progress1)) == 0
+    assert sum(op.numRowsDroppedByWatermark for op in ops(progress2)) == 1
+    assert progress2[-1].eventTime["watermark"] > progress1[-1].eventTime["watermark"]
+    assert any(m.startswith("rocksdb") for op in ops(progress2) for m in op.customMetrics)
 
 
 @pytest.fixture()
@@ -120,6 +284,33 @@ def test_dedup_within_watermark_drops_duplicate(spark, tmp_path, late_events_dir
 
 
 @pytest.mark.streaming
+def test_watermark_drop_counter_equals_planted_late_rows(spark, tmp_path, late_events_dir):
+    """``numRowsDroppedByWatermark`` counts late rows exactly. The fixture
+    is one micro-batch (its straggler is not late yet: the watermark only
+    moves between batches), which leaves the watermark at 1_700_001_800 s
+    (max ts - 30 min). A restart over the same checkpoint then reads two
+    planted rows behind it and one on-time row: the two are dropped and
+    counted, the on-time row is emitted."""
+    ck = str(tmp_path / "ck")
+    first, progress1 = demos.run_with_progress(
+        demos.stream_dedup_within_watermark(spark, late_events_dir), ck
+    )
+    late = [(5, 1_700_000_300, 1, "view"), (6, 1_700_000_400, 1, "view")]
+    _write_events(f"{late_events_dir}/part-1.parquet", late + [(7, 1_700_003_700, 2, "click")])
+    second, progress2 = demos.run_with_progress(
+        demos.stream_dedup_within_watermark(spark, late_events_dir), ck
+    )
+
+    def dropped(progress):
+        return sum(op.numRowsDroppedByWatermark for p in progress for op in p.stateOperators)
+
+    assert sorted(r.event_id for r in first.collect()) == [1, 2, 3, 4]
+    assert dropped(progress1) == 0
+    assert [r.event_id for r in second.collect()] == [7]
+    assert dropped(progress2) == len(late)
+
+
+@pytest.mark.streaming
 def test_stateful_sessionization_matches_batch_sessions(spark, tmp_path):
     streamed = _final(demos.sessionize_stateful(spark, SF_SMOKE), tmp_path, "sess")
     batch = load_all()["q_stream_session"].fn(spark, SF_SMOKE)
@@ -143,43 +334,25 @@ def test_watermark_drops_late_window_contribution(spark, tmp_path):
     fixture is two files consumed with maxFilesPerTrigger=1."""
     import time as _time
 
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
     t0 = 1_700_000_000
     src = tmp_path / "wm_events"
     src.mkdir()
 
-    def _write(name, rows):
-        pq.write_table(
-            pa.table(
-                {
-                    "event_id": pa.array([r[0] for r in rows], pa.int64()),
-                    "ts": pa.array([r[1] * 1_000_000_000 for r in rows], pa.int64()),
-                    "user_id": pa.array([r[2] for r in rows], pa.int64()),
-                    "event_type": pa.array([r[3] for r in rows], pa.string()),
-                    "value": pa.array([1.0] * len(rows), pa.float64()),
-                    "props": pa.array(["{}"] * len(rows), pa.string()),
-                }
-            ),
-            src / name,
-        )
-
     # Batch 1: two rows in the first 1-min window, then a row 1h ahead. The
     # watermark (10-min delay) is computed from a batch's data AFTER the
     # batch, so batch 2 runs with watermark t0+3000s.
-    _write("a.parquet", [(1, t0, 1, "view"), (2, t0 + 10, 1, "view"),
-                         (3, t0 + 3600, 2, "view")])
+    _write_events(src / "a.parquet", [(1, t0, 1, "view"), (2, t0 + 10, 1, "view"),
+                                      (3, t0 + 3600, 2, "view")])
     _time.sleep(1.1)  # file-stream orders by modification time
     # Batch 2: watermark now past the first window's end -> the window is
     # finalized, emitted, and its state evicted at end-of-batch. (A straggler
     # arriving in THIS batch would still be merged: within a batch, inputs
     # are added to state before eviction — empirically pinned.)
-    _write("b.parquet", [(5, t0 + 3610, 2, "view")])
+    _write_events(src / "b.parquet", [(5, t0 + 3610, 2, "view")])
     _time.sleep(1.1)
     # Batch 3: the straggler. Its window was evicted and its event time is
     # behind the watermark -> guaranteed dropped.
-    _write("c.parquet", [(4, t0 + 20, 1, "view")])
+    _write_events(src / "c.parquet", [(4, t0 + 20, 1, "view")])
 
     raw = (
         spark.readStream.schema(demos.EVENTS_RAW_SCHEMA)

@@ -6,7 +6,7 @@ separately each round.
 Usage:  python tools/env_probe.py            # prints JSON, writes ENV_PROBE.json
         python tools/env_probe.py --no-write # print only
 
-Probes (all read-only, no network, no Spark session):
+Probes (read-only outside a temporary directory):
 
 - ``reference``      — /root/reference emptiness (file count, dir mode,
                        mtime). SURVEY §0.1: if this ever reports files,
@@ -21,6 +21,13 @@ Probes (all read-only, no network, no Spark session):
 - ``kafka_jar``      — Kafka connector jars under $SPARK_HOME/jars (none
                        installed => streaming demos stay on file sources
                        + AvailableNow).
+- ``rocksdb_state_store`` — whether the streaming state store opens and
+                       commits (it needs the RocksDB JNI library): a
+                       one-row streaming count on the provider that
+                       ``conf.SESSION_CONFS`` selects, in a temporary
+                       directory (the only probe that needs a Spark
+                       session; it reuses a running one or starts a
+                       ``local[1]`` one and stops it).
 - ``network``        — DNS resolution of github.com with a 2 s timeout
                        (offline expected; a resolving box would mean the
                        reference could be cloned).
@@ -39,6 +46,8 @@ import json
 import os
 import stat
 import sys
+
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def probe_reference() -> dict:
@@ -102,6 +111,51 @@ def probe_kafka_jar() -> dict:
     return out
 
 
+def probe_rocksdb_state_store() -> dict:
+    import shutil
+    import tempfile
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark import SparkContext
+    from pyspark.sql import SparkSession
+
+    from join_example_spark.conf import SESSION_CONFS
+
+    key = "spark.sql.streaming.stateStore.providerClass"
+    out: dict = {"provider": SESSION_CONFS[key]}
+    owns = SparkContext._active_spark_context is None
+    builder = SparkSession.builder
+    if owns:
+        builder = builder.master("local[1]").appName("env_probe").config("spark.ui.enabled", "false")
+    base = builder.getOrCreate()
+    tmp = tempfile.mkdtemp(prefix="env_probe_rocksdb_")
+    try:
+        spark = base.newSession()  # own SQL conf; the caller's is untouched
+        spark.conf.set(key, SESSION_CONFS[key])
+        spark.conf.set("spark.sql.shuffle.partitions", "1")
+        src = os.path.join(tmp, "src")
+        os.mkdir(src)
+        pq.write_table(pa.table({"k": pa.array([1], pa.int64())}), os.path.join(src, "a.parquet"))
+        q = (
+            spark.readStream.schema("k BIGINT").parquet(src).groupBy("k").count()
+            .writeStream.format("noop").outputMode("update")
+            .option("checkpointLocation", os.path.join(tmp, "ck"))
+            .trigger(availableNow=True).start()
+        )
+        q.awaitTermination()
+        metrics = [m for p in q.recentProgress for op in p.stateOperators for m in op.customMetrics]
+        out["opens"] = any(m.startswith("rocksdb") for m in metrics)
+    except Exception as exc:  # noqa: BLE001
+        out["opens"] = False
+        out["error"] = f"{type(exc).__name__}: {exc}"
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
+        if owns:
+            base.stop()
+    return out
+
+
 def probe_network() -> dict:
     import socket
 
@@ -136,6 +190,7 @@ def run_probes() -> dict:
         "reference": probe_reference(),
         "protobuf": probe_protobuf(),
         "kafka_jar": probe_kafka_jar(),
+        "rocksdb_state_store": probe_rocksdb_state_store(),
         "network": probe_network(),
         "versions": probe_versions(),
     }
