@@ -375,9 +375,14 @@ def cosine_lossless_pairs(
         rb = reps.select(
             "_blk", F.col("_id").alias("id_b"), F.col("_vec").alias("_pvb")
         )
-        # FOLD verify on measurement (round-7 A/B: the unrolled 64-dim
-        # dot lost ~1.2s here -- plan/codegen cost exceeds the fold
-        # savings at this volume; see SCALE.md 3.10).
+        # FOLD verify. With the compiled-class cache sized, the unrolled
+        # 64-dim dot is faster here on warm draws (sf0.1, 3 interleaved
+        # pairs: cosine_lossless 3.35 -> 2.77 s, cluster_dbscan 3.58 ->
+        # 3.18 s, two other callers flat), but it costs three of the four
+        # callers 0.9-1.4 s more on their first execution in a JVM
+        # (Catalyst and JIT work on the 64-term tree; Janino compile is at
+        # most 0.25 s of it), and bench.py runs each query once per JVM.
+        # SCALE.md 3.10 has the A/B.
         sim_small = F.round(
             F.expr(DOT_SQL.format(a="_pva", b="_pvb")), round_digits
         )

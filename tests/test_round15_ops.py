@@ -104,7 +104,7 @@ def test_env_probe_runs_and_matches_code_assumptions():
     doc = run_probes()
     assert set(doc) == {
         "probed_at", "reference", "protobuf", "kafka_jar",
-        "rocksdb_state_store", "network", "versions",
+        "rocksdb_state_store", "versions",
     }
     # engine-relevant invariants the code is currently shaped around:
     assert doc["protobuf"]["transform_with_state_usable"] is False

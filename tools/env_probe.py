@@ -28,9 +28,6 @@ Probes (read-only outside a temporary directory):
                        directory (the only probe that needs a Spark
                        session; it reuses a running one or starts a
                        ``local[1]`` one and stops it).
-- ``network``        — DNS resolution of github.com with a 2 s timeout
-                       (offline expected; a resolving box would mean the
-                       reference could be cloned).
 - ``versions``       — pyspark / duckdb / pyarrow / pandas / numpy /
                        python, for drift detection across rounds.
 
@@ -156,22 +153,6 @@ def probe_rocksdb_state_store() -> dict:
     return out
 
 
-def probe_network() -> dict:
-    import socket
-
-    out: dict = {"host": "github.com"}
-    try:
-        socket.setdefaulttimeout(2.0)
-        socket.getaddrinfo("github.com", 443)
-        out["resolves"] = True
-    except OSError as exc:
-        out["resolves"] = False
-        out["error"] = f"{type(exc).__name__}: {exc}"
-    finally:
-        socket.setdefaulttimeout(None)
-    return out
-
-
 def probe_versions() -> dict:
     out = {"python": sys.version.split()[0]}
     for mod in ("pyspark", "duckdb", "pyarrow", "pandas", "numpy"):
@@ -191,7 +172,6 @@ def run_probes() -> dict:
         "protobuf": probe_protobuf(),
         "kafka_jar": probe_kafka_jar(),
         "rocksdb_state_store": probe_rocksdb_state_store(),
-        "network": probe_network(),
         "versions": probe_versions(),
     }
 
