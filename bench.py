@@ -209,35 +209,6 @@ def main() -> None:
             f"(keeping {timings[name]}s; envelope median {_env[name]['median']}s)"
         )
 
-    # Opt-in library-tier pass (VERDICT r14 task 6): the library operators
-    # are oracle-pinned in tests but had no per-round wall-time record
-    # since retirement — `python bench.py --library` times them too so a
-    # regression in a library path is attributable. EXCLUDED from the
-    # driver-recorded total, the stdout queries map, and the envelope;
-    # recorded only under bench_full.json's "library" section.
-    library: dict[str, dict] = {}
-    if "--library" in sys.argv:
-        from join_example_spark.registry import load_library
-
-        lib_timings: dict[str, float] = {}
-        lib_errors: dict[str, str] = {}
-        for name, spec in load_library().items():
-            t0 = time.perf_counter()
-            try:
-                df = spec.fn(spark, sf_dir)
-                df.write.format("noop").mode("overwrite").save()
-            except Exception as exc:  # noqa: BLE001
-                lib_errors[name] = f"{type(exc).__name__}: {exc}"[:500]
-                _log(f"library {name}: ERROR {lib_errors[name]}")
-                continue
-            lib_timings[name] = round(time.perf_counter() - t0, 3)
-            _log(f"library {name}: {lib_timings[name]}s")
-        library = {
-            "queries": lib_timings,
-            "errors": lib_errors,
-            "total_sec": round(sum(lib_timings.values()), 3),
-        }
-
     try:
         spark.stop()
     except Exception as exc:  # noqa: BLE001
@@ -269,7 +240,6 @@ def main() -> None:
                 "redraws": redraws,
                 "warmup_sec": warmup_sec,
                 "warmup_total_sec": round(sum(warmup_sec.values()), 3),
-                "library": library,
             },
             f,
             indent=1,

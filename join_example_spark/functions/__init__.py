@@ -23,14 +23,6 @@ def sum_dec(expr: str, alias: str, scale: int = 6) -> str:
     return f"CAST(SUM(CAST(({expr}) AS DECIMAL(25,{scale}))) AS DOUBLE) AS {alias}"
 
 
-def avg_dec(expr: str, alias: str, scale: int = 6) -> str:
-    """Exact-sum / count average → one IEEE division, identical both sides."""
-    return (
-        f"CAST(SUM(CAST(({expr}) AS DECIMAL(25,{scale}))) AS DOUBLE)"
-        f" / COUNT(*) AS {alias}"
-    )
-
-
 def big(expr: str, alias: str) -> str:
     """Cast an integral computed output to BIGINT (width-normalizing)."""
     return f"CAST(({expr}) AS BIGINT) AS {alias}"

@@ -20,24 +20,6 @@ from typing import Any
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import (
-    BinaryType,
-    LongType,
-    StringType,
-    StructField,
-    StructType,
-)
-
-#: Canonical multimodal record schema: opaque payload + typed metadata.
-MEDIA_SCHEMA = StructType(
-    [
-        StructField("media_id", LongType()),
-        StructField("media_type", StringType()),  # image|audio|video
-        StructField("payload", BinaryType()),
-        StructField("n_bytes", LongType()),
-        StructField("source_uri", StringType()),
-    ]
-)
 
 DECODED_SCHEMA = (
     "media_id BIGINT, media_type STRING, n_bytes BIGINT, "

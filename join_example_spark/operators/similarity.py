@@ -687,7 +687,6 @@ def identity_reps(
 
 def identity_contracted_semantic_edges(
     emb: DataFrame,
-    nprobe: int | None = None,
     threshold: float = 0.35,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
@@ -740,13 +739,10 @@ def identity_contracted_semantic_edges(
     # references (candidate join ×2, centroid limit, identity edges).
     n_reps = reps.count()
     n_centroids = int(_math.ceil(_math.sqrt(max(n_reps, 1))))
-    # nprobe=None (the production default) derives the dial from the rep
-    # count — constant probed fraction, so recall no longer decays with n
-    # (SCALE.md §3.10). Identical to the old nprobe=5 constant at every
-    # fixture SF (n_reps ≤ 2000), so plans, oracles and bench costs are
-    # unchanged there.
-    if nprobe is None:
-        nprobe = adaptive_nprobe(n_reps)
+    # The probe dial derives from the rep count — constant probed
+    # fraction, so recall does not decay with n (SCALE.md §3.10); it is 5
+    # at every fixture SF (n_reps ≤ 2000), which the oracles hardcode.
+    nprobe = adaptive_nprobe(n_reps)
     # FOLD verify, on measurement (round-7 controlled A/B, 3 alternating
     # process pairs): the unrolled 64-dim dot LOST 0.8-1.1 s here — its
     # ~4× bigger tree inflates plan/codegen cost across the join-filter
@@ -1144,58 +1140,6 @@ def imi_topk(
     )
 
 
-def identity_contracted_imi_edges(
-    emb: DataFrame,
-    nprobe_half: int | None = None,
-    nprobe_cells: int | None = None,
-    threshold: float = 0.35,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    round_digits: int = 4,
-) -> DataFrame:
-    """:func:`identity_contracted_semantic_edges` with the IMI candidate
-    generator in place of flat IVF — the sub-n^1.5 semantic-dedup edge
-    path. Same contraction contract (bit-identical vectors collapse
-    first; identity edges reconnect; components preserved exactly), but
-    the coarse quantizer is the two-codebook product index sized
-    ``c_per_half = ⌈∛n_reps⌉``, so BOTH the assignment and the candidate
-    volume are O(n_reps^(4/3)) instead of Θ(n_reps^1.5) (SCALE.md §3.5;
-    measured recall 0.92/0.91/0.69 at sf0.001/0.01/0.1 — the audited
-    dial of ``q_llm_imi_recall``)."""
-    grp = emb.groupBy(vec_col).agg(F.min(id_col).alias("gid"))
-    g = (
-        emb.select(F.col(id_col), F.col(vec_col))
-        .join(grp, vec_col)
-        .localCheckpoint(eager=True)
-    )
-    reps = g.where(F.col(id_col) == F.col("gid")).select(id_col, vec_col)
-    n_reps = reps.count()
-    c_per_half = imi_c_per_half(n_reps)
-    # None (the production default) derives the dials from the rep count —
-    # constant probed fraction of product cells, (4, 8) at every fixture
-    # SF (SCALE.md §3.10b). Explicit values stay explicit (audit variants).
-    d_p, d_t = adaptive_imi_dials(n_reps)
-    if nprobe_half is None:
-        nprobe_half = d_p
-    if nprobe_cells is None:
-        nprobe_cells = d_t
-    dot = F.expr(DOT_SQL.format(a="vec_a", b="vec_b"))
-    rep_edges = (
-        imi_candidate_pairs(
-            reps, c_per_half, nprobe_half, nprobe_cells,
-            id_col=id_col, vec_col=vec_col, round_digits=round_digits,
-            dedup=False,
-        )
-        .withColumn("sim", F.round(dot, round_digits))
-        .where(F.col("sim") >= threshold)
-        .select("id_a", "id_b")
-    )
-    identity_edges = g.where(F.col(id_col) != F.col("gid")).select(
-        F.col("gid").alias("id_a"), F.col(id_col).alias("id_b")
-    )
-    return rep_edges.unionByName(identity_edges)
-
-
 def pq_codebook_subs(
     emb: DataFrame,
     n_codes: int = 256,
@@ -1349,51 +1293,6 @@ def pq_adc_topk(
         scored.withColumn("rn", F.row_number().over(w).cast("bigint"))
         .where(F.col("rn") <= k)
         .select("probe_id", "cand_id", "adc_sim", "rn")
-    )
-
-
-def pq_adc_rerank_topk(
-    emb: DataFrame,
-    k: int = 3,
-    shortlist: int = 64,
-    n_codes: int = 256,
-    n_sub: int = 4,
-    sub_dim: int = 16,
-    probe_pred: str | None = None,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    round_digits: int = 4,
-) -> DataFrame:
-    """Two-stage PQ search (the production IVFPQ shape): ADC over 32-bit
-    codes shortlists ``shortlist`` candidates per probe, then ONLY the
-    shortlist is re-ranked with the exact full-precision dot.
-
-    This is how PQ is actually deployed: the compressed-code scan does the
-    volume work (reads 32 bits/vector), and the expensive exact distance
-    touches ``shortlist`` vectors per probe instead of the corpus. The
-    shortlist size is the recall dial — it must absorb the PQ
-    reconstruction error, which is corpus-dependent (near-isotropic
-    vectors, like this synthetic fixture, are PQ's worst case; measured
-    shortlist-coverage numbers live in the query docstring / SCALE.md).
-    Output sims are EXACT dots — identical semantics to the brute-force
-    ranking whenever the true neighbor makes the shortlist.
-    """
-    if probe_pred is None:
-        probe_pred = f"{id_col} % 100 = 0"
-    adc = pq_adc_topk(
-        emb, shortlist, n_codes, n_sub, sub_dim, probe_pred, id_col, vec_col, round_digits
-    ).select("probe_id", "cand_id")
-    p = emb.select(F.col(id_col).alias("probe_id"), F.col(vec_col).alias("vec_p"))
-    c = emb.select(F.col(id_col).alias("cand_id"), F.col(vec_col).alias("vec_c"))
-    dot = F.expr(DOT_SQL.format(a="vec_p", b="vec_c"))
-    rescored = (
-        adc.join(p, "probe_id").join(c, "cand_id").withColumn("sim", F.round(dot, round_digits))
-    )
-    w = Window.partitionBy("probe_id").orderBy(F.col("sim").desc(), F.col("cand_id"))
-    return (
-        rescored.withColumn("rn", F.row_number().over(w).cast("bigint"))
-        .where(F.col("rn") <= k)
-        .select("probe_id", "cand_id", "sim", "rn")
     )
 
 

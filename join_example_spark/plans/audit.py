@@ -30,12 +30,6 @@ def executed_plan(df: DataFrame) -> str:
         spark.conf.set(key, old)
 
 
-def formatted_explain(df: DataFrame) -> str:
-    return df._sc._jvm.PythonSQLUtils.explainString(  # type: ignore[attr-defined]
-        df._jdf.queryExecution(), "formatted"
-    )
-
-
 def has_broadcast_hash_join(df: DataFrame) -> bool:
     return "BroadcastHashJoin" in executed_plan(df)
 

@@ -14,7 +14,7 @@ from pyspark.sql import functions as F
 
 from join_example_spark.operators.dedup import length_bucket_pairs
 from join_example_spark.operators.sampling import id_hash_sql
-from join_example_spark.registry import register, register_library
+from join_example_spark.registry import register
 from join_example_spark.sources.readers import fanout_repartition, read_table
 
 
@@ -503,73 +503,6 @@ def q_llm_dedup_ngram(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register_library(
-    "q_llm_dedup_cluster",
-    oracle="""
-WITH RECURSIVE
-toks AS (
-    SELECT doc_id, lang, n_chars,
-           list_distinct(string_split(LOWER(TRIM(text)), ' ')) AS toks
-    FROM documents
-    WHERE source IN ('src0', 'src1')
-),
-raw_edges AS (
-    SELECT a.doc_id AS src, b.doc_id AS dst
-    FROM toks a
-    JOIN toks b
-      ON a.lang = b.lang
-     AND a.doc_id < b.doc_id
-     AND abs(a.n_chars - b.n_chars) <= 20
-    WHERE CAST(LEN(list_intersect(a.toks, b.toks)) AS DOUBLE)
-            / CAST(LEN(list_distinct(list_concat(a.toks, b.toks))) AS DOUBLE)
-            >= 0.5
-),
-edges AS (
-    SELECT src, dst FROM raw_edges
-    UNION ALL
-    SELECT dst, src FROM raw_edges
-),
-reach(id, root) AS (
-    SELECT doc_id, doc_id FROM toks
-    UNION
-    SELECT e.dst, r.root FROM reach r JOIN edges e ON e.src = r.id
-)
-SELECT id AS doc_id, MIN(root) AS cluster_id
-FROM reach
-GROUP BY id
-""",
-    note="near-dup CLUSTERS: token-Jaccard pairs as edges, connected "
-    "components by iterative min-label propagation (operators/graph.py); "
-    "oracle = recursive-CTE reachability. The transitive closure is what a "
-    "real dedup keeps one representative per — pairs alone under-merge. "
-    "LIBRARY since round 14 (suite-budget composition, VERDICT r13 task "
-    "3): q_llm_dedup_cluster_star certifies the SAME clustering contract "
-    "against the SAME recursive-CTE oracle via the O(log n) "
-    "star-contraction — the scale path — at half the cost (3.4 s vs "
-    "6.7 s envelope median); the naive-propagation loop (O(diameter) "
-    "rounds) stays oracle-pinned here at both fixture SFs "
-    "(tests/test_round14_ops.py)",
-    tags=("llm", "dedup", "graph"),
-)
-def q_llm_dedup_cluster(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from join_example_spark.operators.graph import connected_components
-
-    # Edges: exactly the near-dup pair semantics (same predicates as the
-    # oracle's raw_edges CTE) — reuse the blocked-join query directly.
-    pairs = q_llm_dedup_near(spark, sf_dir)
-    nodes = (
-        read_table(spark, sf_dir, "documents")
-        .where(F.col("source").isin("src0", "src1"))
-        .select("doc_id")
-    )
-    labels = connected_components(
-        nodes,
-        pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst")),
-        id_col="doc_id",
-    )
-    return labels.select(F.col("id").alias("doc_id"), "cluster_id")
-
-
 @register(
     "q_llm_dedup_cluster_star",
     oracle="""
@@ -605,11 +538,13 @@ SELECT id AS doc_id, MIN(root) AS cluster_id
 FROM reach
 GROUP BY id
 """,
-    note="same clustering contract as q_llm_dedup_cluster but via the "
-    "large-star/small-star formulation (operators/graph.py) — O(log n) "
-    "rounds instead of O(component diameter), the scale path when near-dup "
-    "components chain into long paths; identical recursive-CTE oracle "
-    "proves both formulations agree",
+    note="near-dup CLUSTERS: token-Jaccard pairs (q_llm_dedup_near) as "
+    "edges, connected components by the large-star/small-star formulation "
+    "(operators/graph.py) — O(log n) rounds instead of O(component "
+    "diameter), the scale path when near-dup components chain into long "
+    "paths; oracle = recursive-CTE reachability. The transitive closure is "
+    "what a real dedup keeps one representative per — pairs alone "
+    "under-merge",
     tags=("llm", "dedup", "graph"),
 )
 def q_llm_dedup_cluster_star(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -912,9 +847,8 @@ WHERE rn = 1
 def q_llm_dedup_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
-    # Labels via the O(log n) star-contraction formulation — same clustering
-    # contract as q_llm_dedup_cluster (both hash-match the same recursive-CTE
-    # oracle), measurably faster as the embedded step of a longer pipeline.
+    # Labels via the O(log n) star-contraction formulation (hash-matches
+    # the recursive-CTE oracle of q_llm_dedup_cluster_star).
     labels = q_llm_dedup_cluster_star(spark, sf_dir)
     docs = (
         read_table(spark, sf_dir, "documents")
@@ -1161,9 +1095,8 @@ WHERE rn = 1
     "AUDITED fixture operating point (pair "
     "recall 0.97/0.85 vs 0.34-0.37 at nprobe=2 — material: 726 vs 71 "
     "clusters at sf0.1; the 0.35 threshold sits in the near-orthogonal "
-    "hard regime with NO high-sim easy band). Cheaper dials remain "
-    "declared: nprobe=1 (q_llm_dedup_semantic_ivf) and the labeled "
-    "quadratic baseline q_llm_dedup_semantic_exact",
+    "hard regime with NO high-sim easy band); the nprobe recall curve is "
+    "audited by q_llm_ann_recall_nprobe",
     tags=("llm", "dedup", "similarity", "graph", "approx"),
 )
 def q_llm_dedup_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1172,8 +1105,8 @@ def q_llm_dedup_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     emb = read_table(spark, sf_dir, "embeddings")
-    # nprobe=None -> adaptive_nprobe(n_reps): 5 at every fixture SF (same
-    # plan/cost/oracle), growing with the rep count past it (SCALE.md 3.10).
+    # The dial is adaptive_nprobe(n_reps): 5 at every fixture SF, growing
+    # with the rep count past it (SCALE.md 3.10).
     pairs = identity_contracted_semantic_edges(emb, threshold=0.35)
     return _semantic_cluster_reps(emb, pairs)
 
@@ -1214,8 +1147,8 @@ def q_llm_split_leakage_safe(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     emb = read_table(spark, sf_dir, "embeddings")
-    # nprobe=None -> adaptive_nprobe(n_reps): 5 at every fixture SF (same
-    # plan/cost/oracle), growing with the rep count past it (SCALE.md 3.10).
+    # The dial is adaptive_nprobe(n_reps): 5 at every fixture SF, growing
+    # with the rep count past it (SCALE.md 3.10).
     pairs = identity_contracted_semantic_edges(emb, threshold=0.35)
     labels = connected_components_star(
         emb.select("vec_id"),
@@ -1231,66 +1164,6 @@ def q_llm_split_leakage_safe(spark: SparkSession, sf_dir: str) -> DataFrame:
         .otherwise(F.lit("test"))
         .alias("split"),
     )
-
-
-@register_library(
-    "q_llm_dedup_semantic_exact",
-    oracle=f"""
-WITH RECURSIVE
-raw_edges AS (
-    SELECT a.vec_id AS src, b.vec_id AS dst
-    FROM embeddings a
-    JOIN embeddings b
-      ON a.label = b.label AND a.vec_id < b.vec_id
-    WHERE ROUND({_DUCK_DOT.format(a="a.embedding", b="b.embedding")}, 4) >= 0.35
-),
-edges AS (
-    SELECT src, dst FROM raw_edges
-    UNION ALL
-    SELECT dst, src FROM raw_edges
-),
-reach(id, root) AS (
-    SELECT vec_id, vec_id FROM embeddings
-    UNION
-    SELECT e.dst, r.root FROM reach r JOIN edges e ON e.src = r.id
-),
-labels AS (
-    SELECT id AS vec_id, MIN(root) AS cluster_id FROM reach GROUP BY id
-),
-ranked AS (
-    SELECT l.cluster_id, l.vec_id,
-           ROW_NUMBER() OVER (
-               PARTITION BY l.cluster_id
-               ORDER BY sqrt(list_aggregate(list_transform(e.embedding,
-                          x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)), 'sum')) DESC,
-                        l.vec_id) AS rn,
-           COUNT(*) OVER (PARTITION BY l.cluster_id) AS sz
-    FROM labels l JOIN embeddings e ON e.vec_id = l.vec_id
-)
-SELECT cluster_id,
-       vec_id AS rep_vec_id,
-       CAST(sz AS BIGINT) AS cluster_size
-FROM ranked
-WHERE rn = 1
-""",
-    note="EXPLICITLY-LABELED QUADRATIC BASELINE (was the default until "
-    "round 4): label-blocked exact all-pairs cosine edges (the "
-    "q_llm_embed_near semantics) into the same star-contraction + "
-    "max-norm election tail. Kept as the recall yardstick the approximate "
-    "paths are audited against; the 8x stress probe measures its edge gen "
-    "at 64x pair growth (SCALE.md §3.2), which is exactly why it is NOT "
-    "the default — use q_llm_dedup_semantic (multi-probe IVF) instead. "
-    "RETIRED from the declared suite round 12 (suite-budget composition; "
-    "~4 s envelope median bought no new coverage — it was driver-green "
-    "r4-r11 and its parity proof is preserved verbatim by the library "
-    "oracle mirror in tests/test_round12_ops.py)",
-    tags=("llm", "dedup", "similarity", "graph", "baseline"),
-)
-def q_llm_dedup_semantic_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from join_example_spark.operators.similarity import cosine_near_pairs
-
-    emb = read_table(spark, sf_dir, "embeddings")
-    return _semantic_cluster_reps(emb, cosine_near_pairs(emb, threshold=0.35))
 
 
 @register(
@@ -1651,237 +1524,6 @@ def q_llm_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where(F.col("hamming") <= 3)
         .select("id_a", "id_b", "hamming")
     )
-
-
-@register_library(
-    "q_llm_dedup_semantic_ivf",
-    oracle=f"""
-WITH RECURSIVE
-g AS (
-    SELECT vec_id, embedding,
-           MIN(vec_id) OVER (PARTITION BY embedding) AS gid
-    FROM embeddings
-),
-reps AS (
-    SELECT vec_id, embedding FROM g WHERE vec_id = gid
-),
-cents AS (
-    SELECT vec_id AS cent_id, embedding AS cvec
-    FROM reps ORDER BY vec_id
-    LIMIT (SELECT CAST(ceil(sqrt(COUNT(*))) AS BIGINT) FROM reps)
-), assign AS (
-    SELECT e.vec_id, e.embedding, c.cent_id,
-           ROW_NUMBER() OVER (
-               PARTITION BY e.vec_id
-               ORDER BY ROUND({_DUCK_DOT.format(a="e.embedding", b="c.cvec")}, 4) DESC,
-                        c.cent_id) AS arn
-    FROM reps e CROSS JOIN cents c
-), cells AS (
-    SELECT vec_id, embedding, cent_id AS cell FROM assign WHERE arn = 1
-),
-rep_edges AS (
-    SELECT a.vec_id AS src, b.vec_id AS dst
-    FROM cells a
-    JOIN cells b
-      ON a.cell = b.cell AND a.vec_id < b.vec_id
-    WHERE ROUND({_DUCK_DOT.format(a="a.embedding", b="b.embedding")}, 4) >= 0.35
-),
-raw_edges AS (
-    SELECT src, dst FROM rep_edges
-    UNION ALL
-    SELECT gid AS src, vec_id AS dst FROM g WHERE vec_id <> gid
-),
-edges AS (
-    SELECT src, dst FROM raw_edges
-    UNION ALL
-    SELECT dst, src FROM raw_edges
-),
-reach(id, root) AS (
-    SELECT vec_id, vec_id FROM embeddings
-    UNION
-    SELECT e.dst, r.root FROM reach r JOIN edges e ON e.src = r.id
-),
-labels AS (
-    SELECT id AS vec_id, MIN(root) AS cluster_id FROM reach GROUP BY id
-),
-ranked AS (
-    SELECT l.cluster_id, l.vec_id,
-           ROW_NUMBER() OVER (
-               PARTITION BY l.cluster_id
-               ORDER BY sqrt(list_aggregate(list_transform(e.embedding,
-                          x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)), 'sum')) DESC,
-                        l.vec_id) AS rn,
-           COUNT(*) OVER (PARTITION BY l.cluster_id) AS sz
-    FROM labels l JOIN embeddings e ON e.vec_id = l.vec_id
-)
-SELECT cluster_id,
-       vec_id AS rep_vec_id,
-       CAST(sz AS BIGINT) AS cluster_size
-FROM ranked
-WHERE rn = 1
-""",
-    note="the cheap-dial semantic dedup (nprobe=1), fully oracle-"
-    "certified and identity-contracted since round 5: bit-identical "
-    "vectors collapse first, then edge candidates come from the "
-    "deterministic IVF coarse quantizer with ceil(sqrt(n_reps)) "
-    "centroids — cell population ~sqrt(n), so cell-local pair work is "
-    "~n^1.5 instead of the label-block all-pairs n^2 (a FIXED centroid "
-    "count degenerates back to quadratic, measured in the 8x stress "
-    "probe; sqrt-scaling is the standard IVF sizing). Contraction "
-    "matters here too: UNcontracted this query paid 28x on the 64x "
-    "duplicate-saturated tier (6.3 -> 176 s, SCALE.md 3.4); contracted "
-    "it absorbs duplication linearly. The centroid count is stated "
-    "identically in the oracle via a computed LIMIT. Same "
-    "star-contraction + max-norm election tail as q_llm_dedup_semantic; "
-    "clusters differ from the exact path only where an edge crosses IVF "
-    "cells — the recall trade every ANN index makes, measured by "
-    "q_llm_ann_recall. LIBRARY tier since round 15 (suite-budget "
-    "composition, VERDICT r14 task 1): the cheap-dial (nprobe=1) "
-    "sibling of the declared multi-probe default — the semantic-edge "
-    "machinery it shares with q_llm_dedup_semantic and "
-    "q_llm_split_leakage_safe executed 3x per suite run; the nprobe "
-    "dial's recall curve stays driver-audited via "
-    "q_llm_ann_recall_nprobe, and full oracle parity is preserved at "
-    "both fixture SFs in tests/test_round15_ops.py",
-    tags=("llm", "dedup", "similarity", "graph", "approx"),
-)
-def q_llm_dedup_semantic_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from join_example_spark.operators.similarity import (
-        identity_contracted_semantic_edges,
-    )
-
-    emb = read_table(spark, sf_dir, "embeddings")
-    pairs = identity_contracted_semantic_edges(emb, nprobe=1, threshold=0.35)
-    return _semantic_cluster_reps(emb, pairs)
-
-
-# DuckDB twin of the IMI quantizer over the contracted reps (textually
-# parallel to llm_similarity._duck_imi_ctes, but sourced from `reps` with
-# the exact-integer ∛n_reps codebook sizing of imi_c_per_half).
-_IMI_DEDUP_DOT1 = _DUCK_DOT.format(a="list_slice(e.embedding, 1, 32)", b="c.cv1")
-_IMI_DEDUP_DOT2 = _DUCK_DOT.format(a="list_slice(e.embedding, 33, 64)", b="c.cv2")
-_IMI_LABEL_CTES = f"""g AS (
-    SELECT vec_id, embedding,
-           MIN(vec_id) OVER (PARTITION BY embedding) AS gid
-    FROM embeddings
-),
-reps AS (
-    SELECT vec_id, embedding FROM g WHERE vec_id = gid
-),
-imi_cents AS (
-    SELECT ROW_NUMBER() OVER (ORDER BY vec_id) AS cidx,
-           list_slice(embedding, 1, 32) AS cv1,
-           list_slice(embedding, 33, 64) AS cv2
-    FROM (SELECT vec_id, embedding FROM reps ORDER BY vec_id
-          LIMIT (SELECT GREATEST(4, (SELECT CAST(MIN(i) AS BIGINT)
-                 FROM range(1, 1025) t(i)
-                 WHERE i*i*i >= (SELECT COUNT(*) FROM reps)))))
-), imi_assign AS (
-    SELECT e.vec_id, c.cidx,
-           ROUND({_IMI_DEDUP_DOT1}, 4) AS s1,
-           ROUND({_IMI_DEDUP_DOT2}, 4) AS s2,
-           ROW_NUMBER() OVER (PARTITION BY e.vec_id
-               ORDER BY ROUND({_IMI_DEDUP_DOT1}, 4) DESC, c.cidx) AS rn1,
-           ROW_NUMBER() OVER (PARTITION BY e.vec_id
-               ORDER BY ROUND({_IMI_DEDUP_DOT2}, 4) DESC, c.cidx) AS rn2
-    FROM reps e CROSS JOIN imi_cents c
-), imi_prod AS (
-    SELECT a1.vec_id, a1.cidx AS c1, a2.cidx AS c2,
-           ROW_NUMBER() OVER (PARTITION BY a1.vec_id
-               ORDER BY a1.s1 + a2.s2 DESC, a1.cidx, a2.cidx) AS prn
-    FROM imi_assign a1
-    JOIN imi_assign a2 ON a1.vec_id = a2.vec_id
-    WHERE a1.rn1 <= 4 AND a2.rn2 <= 4
-), imi_cells AS (
-    SELECT vec_id, c1 * 1024 + c2 AS cell FROM imi_prod WHERE prn <= 8
-),
-rep_edges AS (
-    SELECT DISTINCT a.vec_id AS src, b.vec_id AS dst
-    FROM imi_cells a
-    JOIN imi_cells b ON a.cell = b.cell AND a.vec_id < b.vec_id
-    JOIN reps ra ON ra.vec_id = a.vec_id
-    JOIN reps rb ON rb.vec_id = b.vec_id
-    WHERE ROUND({_DUCK_DOT.format(a="ra.embedding", b="rb.embedding")}, 4) >= 0.35
-),
-raw_edges AS (
-    SELECT src, dst FROM rep_edges
-    UNION ALL
-    SELECT gid AS src, vec_id AS dst FROM g WHERE vec_id <> gid
-),
-edges AS (
-    SELECT src, dst FROM raw_edges
-    UNION ALL
-    SELECT dst, src FROM raw_edges
-),
-reach(id, root) AS (
-    SELECT vec_id, vec_id FROM embeddings
-    UNION
-    SELECT e.dst, r.root FROM reach r JOIN edges e ON e.src = r.id
-),
-labels AS (
-    SELECT id AS vec_id, MIN(root) AS cluster_id FROM reach GROUP BY id
-)"""
-
-
-@register_library(
-    "q_llm_dedup_semantic_imi",
-    oracle=f"""
-WITH RECURSIVE
-{_IMI_LABEL_CTES},
-ranked AS (
-    SELECT l.cluster_id, l.vec_id,
-           ROW_NUMBER() OVER (
-               PARTITION BY l.cluster_id
-               ORDER BY sqrt(list_aggregate(list_transform(e.embedding,
-                          x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)), 'sum')) DESC,
-                        l.vec_id) AS rn,
-           COUNT(*) OVER (PARTITION BY l.cluster_id) AS sz
-    FROM labels l JOIN embeddings e ON e.vec_id = l.vec_id
-)
-SELECT cluster_id,
-       vec_id AS rep_vec_id,
-       CAST(sz AS BIGINT) AS cluster_size
-FROM ranked
-WHERE rn = 1
-""",
-    note="semantic dedup through the INVERTED MULTI-INDEX — the sub-n^1.5 "
-    "variant of the family (Babenko & Lempitsky 2012): identity "
-    "contraction first (bit-identical vectors collapse, one hash "
-    "shuffle), then candidates come from two ∛n_reps-centroid per-half "
-    "codebooks' multi-sequence product cells (top-4 per half, top-8 "
-    "products by s1+s2) over the DISTINCT reps, exact rounded-dot >= "
-    "0.35 verify, identity-edge reconnect, star-contraction components, "
-    "max-norm election. Cost shape: assignment 2·n^(4/3) dots and "
-    "expected pair volume T²·n^(4/3)/2 — BOTH strictly below flat IVF's "
-    "Θ(n^1.5) (q_llm_dedup_semantic pays n·√n assignment alone), the "
-    "one structural rung between IVF and the out-of-scope HNSW class "
-    "(SCALE.md §3.5). Recall at the audited dial: 0.92/0.69 at "
-    "sf0.01/sf0.1 (q_llm_imi_recall), vs 0.97/0.85 for nprobe=5 IVF at "
-    "~2x the candidate budget — clusters under-merge only where an edge "
-    "crosses all 8 probed product cells. NOT the family default "
-    "(round-6 decision, SCALE.md §3.7b): at the 64x/128k distinct tier "
-    "the FIXED T=8 dial's probed fraction shrinks as n^(-2/3) and pair "
-    "recall falls to 0.21 vs IVF-nprobe=5's 0.37 — matched recall at "
-    "that n needs T~36, which pays off only where assignment dots "
-    "dominate (shuffle-bound clusters), not on local CPU. LIBRARY tier "
-    "since round 13 (suite-budget composition, VERDICT r12 task 1): of "
-    "the three semantic-dedup siblings it is the non-default one, and "
-    "its IMI posture stays independently driver-audited via "
-    "q_llm_imi_recall + q_llm_sim_imi/q_llm_sim_imipq. Full "
-    "oracle-parity proof preserved at both fixture SFs in "
-    "tests/test_round13_ops.py; driver history green r5-r12",
-    tags=("llm", "dedup", "similarity", "graph", "approx"),
-)
-def q_llm_dedup_semantic_imi(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from join_example_spark.operators.similarity import identity_contracted_imi_edges
-
-    emb = read_table(spark, sf_dir, "embeddings")
-    # Dials derive from the rep count (== (4, 8) at every fixture SF,
-    # growing to hold the probed product-cell fraction — SCALE.md 3.10b).
-    pairs = identity_contracted_imi_edges(
-        emb, threshold=0.35
-    )
-    return _semantic_cluster_reps(emb, pairs)
 
 
 # Cross-document substring-window dedup (Lee et al., "Deduplicating

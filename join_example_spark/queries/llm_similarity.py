@@ -17,7 +17,7 @@ from join_example_spark.operators.similarity import (
     ivf_topk,
     lsh_ann_pairs,
 )
-from join_example_spark.registry import register, register_library
+from join_example_spark.registry import register
 from join_example_spark.sources.readers import (
     fanout_repartition,
     read_table,
@@ -1010,8 +1010,8 @@ SELECT probe_id, cand_id, adc_sim, rn FROM (
     "corpus is PQ's worst case -- measured: the exact top-1 sits at ADC "
     "rank <= 51 for n=500, <= 297 for n=5000); the USABLE search is "
     "q_llm_sim_ivfpq (IVF cell restriction + constant shortlist=32 exact "
-    "re-rank); q_llm_sim_pq_rerank_baseline measures what flat ADC needs "
-    "without IVF (n/4). This query certifies the LUT machinery itself",
+    "re-rank; flat ADC without IVF needs a linear shortlist of about n/4). "
+    "This query certifies the LUT machinery itself",
     tags=("llm", "similarity", "approx"),
 )
 def q_llm_sim_pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1165,82 +1165,6 @@ def q_llm_decontaminate_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
         train_g.select("vec_id", "gid")
         .join(best, F.col("gid") == F.col("rid"))
         .select("vec_id", "eval_id", "sim")
-    )
-
-
-@register_library(
-    "q_llm_sim_pq_rerank_baseline",
-    oracle=f"""
-WITH {_PQ_CTES},
-lut AS (
-    SELECT v.vec_id AS probe_id, v.sub, c.code,
-           ROUND({_DUCK_DOT.format(a="v.v_sub", b="c.cb_sub")}, 4) AS part
-    FROM vs v JOIN cbs c ON c.sub = v.sub
-    WHERE v.vec_id % 100 = 0
-),
-scored AS (
-    SELECT l.probe_id, a.vec_id AS cand_id,
-           CAST(SUM(CAST(l.part AS DECIMAL(25,6))) AS DOUBLE) AS adc_sim
-    FROM assign a
-    JOIN lut l ON l.sub = a.sub AND l.code = a.code
-    WHERE l.probe_id <> a.vec_id
-    GROUP BY l.probe_id, a.vec_id
-),
-short AS (
-    SELECT probe_id, cand_id FROM (
-        SELECT probe_id, cand_id,
-               ROW_NUMBER() OVER (PARTITION BY probe_id
-                                  ORDER BY adc_sim DESC, cand_id) AS arn
-        FROM scored
-    ) WHERE arn <= (SELECT GREATEST(64, CAST(ceil(COUNT(*) / 4.0) AS BIGINT))
-                    FROM embeddings)
-),
-rescored AS (
-    SELECT s.probe_id, s.cand_id,
-           ROUND({_DUCK_DOT.format(a="p.embedding", b="c.embedding")}, 4) AS sim
-    FROM short s
-    JOIN embeddings p ON p.vec_id = s.probe_id
-    JOIN embeddings c ON c.vec_id = s.cand_id
-)
-SELECT probe_id, cand_id, sim, rn FROM (
-    SELECT probe_id, cand_id, sim,
-           CAST(ROW_NUMBER() OVER (PARTITION BY probe_id
-                                   ORDER BY sim DESC, cand_id) AS BIGINT) AS rn
-    FROM rescored
-) WHERE rn <= 3
-""",
-    note="EXPLICITLY-LABELED LINEAR-SHORTLIST BASELINE (was "
-    "q_llm_sim_pq_rerank until round 5): whole-corpus two-stage PQ "
-    "search -- the 32-bit-code ADC scan shortlists max(64, n/4) "
-    "candidates per probe, then ONLY the shortlist is re-ranked with the "
-    "exact full-precision dot. The n/4 dial is NOT scale-free: it is the "
-    "measured coverage requirement of flat (un-partitioned) ADC on this "
-    "near-isotropic corpus, PQ's worst case (worst ADC rank of the exact "
-    "top-1: 51 at n=500, 297 at n=2000 -- the rank grows WITH n, so any "
-    "constant shortlist eventually misses), which means the per-probe "
-    "re-rank is linear in n and with probes proportional to n the path "
-    "is O(n^2/400) -- a densify-and-die shape at 100 TB. Kept as the "
-    "recall yardstick that measures raw PQ reconstruction quality; the "
-    "production default is q_llm_sim_ivfpq, whose IVF cell restriction "
-    "makes a CONSTANT shortlist=32 sufficient (in-cell candidate sets "
-    "are small and centroid-homogeneous). Unit test pins exact-top-1 "
-    "membership in the re-ranked top-3 at n=500 and n=2000. RETIRED "
-    "from the declared suite round 12 (suite-budget composition; "
-    "driver-green r4-r11, the ~3 s envelope median bought no new "
-    "coverage — parity proof preserved verbatim by the library oracle "
-    "mirror in tests/test_round12_ops.py)",
-    tags=("llm", "similarity", "approx", "baseline"),
-)
-def q_llm_sim_pq_rerank_baseline(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import math
-
-    from join_example_spark.operators.similarity import pq_adc_rerank_topk
-
-    emb = read_table(spark, sf_dir, "embeddings")
-    # Footer-metadata row count (cached, no scan — round 13, VERDICT r12 #4).
-    shortlist = max(64, int(math.ceil(table_row_count(sf_dir, "embeddings") / 4.0)))
-    return pq_adc_rerank_topk(
-        emb, k=3, shortlist=shortlist, probe_pred="vec_id % 100 = 0"
     )
 
 
@@ -1913,9 +1837,7 @@ def q_graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     return core.select(F.col("v").alias("vec_id"), "core_deg")
 
 
-@register_library(
-    "q_llm_mine_margin_baseline",
-    oracle=f"""
+MARGIN_BASELINE_ORACLE = f"""
 WITH probes AS (
     SELECT vec_id AS probe_id, embedding AS pv FROM embeddings
     WHERE vec_id % 50 = 0
@@ -1942,29 +1864,30 @@ SELECT probe_id, CAST(best_id AS BIGINT) AS best_id, best_sim,
        best_sim - second_sim AS margin,
        (best_sim - second_sim) >= 0.05 AND best_sim >= 0.3 AS accepted
 FROM best2
-""",
-    note="margin-based mining (the Artetxe & Schwenk bitext-mining "
-    "acceptance rule, absolute-margin variant): each probe keeps its "
-    "best corpus match only if best_sim clears a floor AND beats the "
-    "second-best by a margin — the curation signal that rejects hubness "
-    "artifacts (a probe whose neighborhood is uniformly mediocre gets a "
-    "small margin and is dropped, where a plain top-1 would keep it). "
-    "Determinism: sims are ROUND(fold, 4) doubles under a (sim desc, "
-    "cand_id) total order; margin is one exact-rounded IEEE subtraction "
-    "of identical operands, and both acceptance comparisons evaluate "
-    "on identical doubles. SCALE-BASELINE BY DESIGN (renamed from "
-    "q_llm_mine_margin in round 9): the flat probes x corpus crossJoin "
-    "is the exact ground truth the family's audits compare against; the "
-    "family DEFAULT is q_llm_mine_margin_ivf, which routes the probe "
-    "side through the multi-probe IVF front end exactly as the dedup "
-    "family does. RETIRED from the declared suite round 12 (suite-"
-    "budget composition): this exact plan still executes INSIDE the "
-    "declared q_llm_mine_margin_recall every round (flat_acc side), "
-    "and the oracle-parity proof is preserved verbatim by the library "
-    "mirror in tests/test_round12_ops.py",
-    tags=("llm", "similarity", "search"),
-)
+"""
+
+
 def q_llm_mine_margin_baseline(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Margin-based mining, exact flat ground truth (the Artetxe & Schwenk
+    bitext-mining acceptance rule, absolute-margin variant): each probe
+    (``vec_id % 50 == 0``) keeps its best corpus match only if best_sim
+    clears a floor AND beats the second-best by a margin — the curation
+    signal that rejects hubness artifacts (a probe whose neighborhood is
+    uniformly mediocre gets a small margin and is dropped, where a plain
+    top-1 would keep it).
+
+    Determinism: sims are ROUND(fold, 4) doubles under a (sim desc,
+    cand_id) total order; margin is one exact-rounded IEEE subtraction of
+    identical operands, and both acceptance comparisons evaluate on
+    identical doubles.
+
+    Scale baseline by design: the flat probes x corpus crossJoin is the
+    exact truth that the declared q_llm_mine_margin_recall runs as its
+    flat side and that tests compare the family default
+    q_llm_mine_margin_ivf against. Not a declared query; its row-level
+    DuckDB twin is ``MARGIN_BASELINE_ORACLE``, oracle-pinned in tests at
+    both fixture SFs.
+    """
     from pyspark.sql import Window
 
     from join_example_spark.operators.similarity import DOT_SQL
@@ -2392,9 +2315,7 @@ def q_llm_mine_margin_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register_library(
-    "q_llm_mine_margin_ratio_baseline",
-    oracle=f"""
+MARGIN_RATIO_BASELINE_ORACLE = f"""
 WITH fwd AS (
     SELECT p.vec_id AS probe_id, c.vec_id AS cand_id,
            ROUND({_DUCK_DOT.format(a="p.embedding", b="c.embedding")}, 4) AS sim
@@ -2441,39 +2362,40 @@ SELECT probe_id, CAST(cand_id AS BIGINT) AS best_id, sim AS best_sim,
        ratio,
        ratio >= 1.05 AND sim >= 0.3 AS accepted
 FROM rk WHERE rn = 1
-""",
-    note="RATIO-margin mining (the Artetxe & Schwenk 2019 flagship "
-    "scoring, round 10): score(x, y) = sim(x, y) / (den_x + den_y) with "
-    "den = (sum of the top-4 neighbor sims, missing treated as 0) / 8 — "
-    "the distance-normalized, hubness-robust variant the paper prefers "
-    "over the absolute margin (q_llm_mine_margin_baseline): a hub whose "
-    "whole neighborhood is uniformly close gets a large den and a ratio "
-    "near 1, where the absolute rule needs a tuned gap. Den slots are "
-    "NONNEG-CLAMPED (GREATEST(s_i, 0), round 11): negative-sim neighbors "
-    "must not inflate the ratio, and the clamp is what makes the IVF "
-    "sibling's screening bounds theorems (see _top4_den). k = 4 neighbors "
-    "is the dyadic choice: den sums are FIXED-ORDER additions of "
-    "clamped rounded-sim doubles (left-associated identically on both "
-    "engines) divided by 8 (a power of two — exact), "
-    "so every den, the den_x + den_y sum, and the final IEEE division "
-    "are bit-identical cross-engine; the ratio is emitted RAW (the "
-    "determinism rule for quotients). Acceptance: ratio >= 1.05 AND "
-    "best_sim >= 0.3 (the sim floor guards the ratio rule's known "
-    "scale-invariance weakness: an all-garbage neighborhood can have a "
-    "confident ratio). Backward dens use the probe set as the opposing "
-    "corpus, exactly the bitext-mining setup. SCALE-BASELINE BY DESIGN "
-    "(the probes x corpus crossJoin, executed once and localCheckpointed "
-    "against the three-consumer branch split — the round-5 lesson); the "
-    "family scale default is q_llm_mine_margin_ratio_ivf. RETIRED from "
-    "the declared suite round 12 (suite-budget composition): this exact "
-    "plan still executes INSIDE the declared q_llm_mine_margin_ratio_"
-    "recall every round (flat_acc side), and the oracle-parity proof is "
-    "preserved verbatim by the library mirror in tests/test_round12_ops.py",
-    tags=("llm", "similarity", "search"),
-)
+"""
+
+
 def q_llm_mine_margin_ratio_baseline(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
+    """RATIO-margin mining, exact flat ground truth (the Artetxe & Schwenk
+    2019 flagship scoring): score(x, y) = sim(x, y) / (den_x + den_y) with
+    den = (sum of the top-4 neighbor sims, missing treated as 0) / 8 — the
+    distance-normalized, hubness-robust variant the paper prefers over the
+    absolute margin (q_llm_mine_margin_baseline): a hub whose whole
+    neighborhood is uniformly close gets a large den and a ratio near 1,
+    where the absolute rule needs a tuned gap.
+
+    Den slots are NONNEG-CLAMPED (GREATEST(s_i, 0)): negative-sim
+    neighbors must not inflate the ratio, and the clamp is what makes the
+    IVF sibling's screening bounds theorems (see _top4_den). k = 4 is the
+    dyadic choice: den sums are FIXED-ORDER additions of clamped
+    rounded-sim doubles divided by 8 (exact), so every den, the
+    den_x + den_y sum and the final IEEE division are bit-identical
+    cross-engine; the ratio is emitted RAW. Acceptance: ratio >= 1.05 AND
+    best_sim >= 0.3 (the sim floor guards the ratio rule's
+    scale-invariance weakness: an all-garbage neighborhood can have a
+    confident ratio). Backward dens use the probe set
+    (``vec_id % 100 == 0``) as the opposing corpus, exactly the
+    bitext-mining setup.
+
+    Scale baseline by design (the probes x corpus crossJoin, executed
+    once and localCheckpointed against the three-consumer branch split);
+    the family scale default is the declared q_llm_mine_margin_ratio_ivf,
+    which tests compare against this flat truth. Not a declared query;
+    its row-level DuckDB twin is ``MARGIN_RATIO_BASELINE_ORACLE``,
+    oracle-pinned in tests at both fixture SFs.
+    """
     from pyspark.sql import Window
 
     from join_example_spark.operators.similarity import DOT_SQL
@@ -2923,9 +2845,7 @@ def q_llm_mine_margin_ratio_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out
 
 
-@register_library(
-    "q_llm_mine_margin_ratio_recall",
-    oracle=f"""
+MARGIN_RATIO_RECALL_ORACLE = f"""
 WITH {_RATIO_IVF_CTES},
 ivf_acc AS (
     SELECT e.probe_id,
@@ -2994,40 +2914,35 @@ SELECT (SELECT CAST(COUNT(*) AS BIGINT) FROM embeddings
              / NULLIF(CAST((SELECT COUNT(*) FROM flat_acc) AS DOUBLE), 0.0),
              6) AS accept_recall
 FROM agg
-""",
-    note="the RATIO-margin family's ACCEPT-RECALL + ESCALATED-FRACTION "
-    "audit as a declared query (round 11, verdict task 4 — mirrors "
-    "q_llm_mine_margin_recall): runs the family scale default "
-    "(_ratio_ivf_plan — literally the same builder "
-    "q_llm_mine_margin_ratio_ivf ships, so the audit can never drift "
-    "from the plan it certifies) AND the exact flat ground truth "
-    "(q_llm_mine_margin_ratio_baseline) side by side. Emits the "
-    "statistics a 100 TB deployment gates on (SCALE.md §3.15): "
-    "escalated_frac (the fraction of probes whose screen escalates to "
-    "exact verify — the cost observable; ~1.0 on the isotropic "
-    "accept-all fixtures, the sparse-accept regime is where the screen "
-    "pays), n_true_accepts / n_ivf_accepts / n_hits, precision_exact "
-    "(the verify-the-positives 1.0-precision contract, asserted "
-    "literally by the oracle twin), accept_recall (NULL via NULLIF "
-    "when the fixture has no true accepts). Ground truth is quadratic "
-    "BY DEFINITION — production runs this audit on a bounded probe "
-    "sample exactly as the SCALE.md §3.15 tier probe did; the declared "
-    "form certifies the audit machinery cross-engine at fixture scale. "
-    "Count ratios are int64->double (correctly rounded both engines) "
-    "with ROUND(x, 6) far from half-ulp boundaries at fixture "
-    "cardinalities. LIBRARY tier since round 13 (suite-budget "
-    "composition, VERDICT r12 task 1): at ~7.1 s envelope median it was "
-    "the single heaviest declared query; its flat-truth half was "
-    "already library-mirrored (q_llm_mine_margin_ratio_baseline) and "
-    "the shipped screen stays driver-audited via "
-    "q_llm_mine_margin_ratio_ivf. Full oracle-parity proof preserved "
-    "at both fixture SFs in tests/test_round13_ops.py; driver history "
-    "green r11-r12",
-    tags=("llm", "similarity", "approx"),
-)
+"""
+
+
 def q_llm_mine_margin_ratio_recall(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
+    """The RATIO-margin family's ACCEPT-RECALL + ESCALATED-FRACTION audit
+    (mirrors the declared q_llm_mine_margin_recall): runs the family scale
+    default (_ratio_ivf_plan — the same builder q_llm_mine_margin_ratio_ivf
+    ships, so the audit cannot drift from the plan it certifies) AND the
+    exact flat ground truth (q_llm_mine_margin_ratio_baseline) side by
+    side, in one row.
+
+    Emits the statistics a 100 TB deployment gates on (SCALE.md §3.15):
+    escalated_frac (the fraction of probes whose screen escalates to
+    exact verify — the cost observable; ~1.0 on the isotropic accept-all
+    fixtures), n_true_accepts / n_ivf_accepts / n_hits, precision_exact
+    (the verify-the-positives 1.0-precision contract, asserted literally
+    by the oracle twin) and accept_recall (NULL via NULLIF when there are
+    no true accepts). Ground truth is quadratic by definition; production
+    runs this audit on a bounded probe sample. Count ratios are
+    int64 -> double with ROUND(x, 6), far from half-ulp boundaries at
+    fixture cardinalities.
+
+    Not a declared query: tests drive it over seeded adversarial
+    geometries, and its row-level DuckDB twin
+    ``MARGIN_RATIO_RECALL_ORACLE`` is oracle-pinned in tests at both
+    fixture SFs.
+    """
     out, esc = _ratio_ivf_plan(spark, sf_dir)
     flat_acc = (
         q_llm_mine_margin_ratio_baseline(spark, sf_dir)

@@ -42,15 +42,6 @@ class QuerySpec:
 #: name -> spec, in registration order.
 REGISTRY: dict[str, QuerySpec] = {}
 
-#: Library (non-declared) specs: operators kept with their oracle twins and
-#: unit-pinned parity proofs, but NOT exposed to the driver/bench surface.
-#: Round 12 introduced this tier to retire redundant quadratic ground-truth
-#: baselines from the declared suite (suite-budget composition, VERDICT r11
-#: task 2) without losing their oracle-certified losslessness evidence —
-#: tests/test_round12_ops.py mirrors each library spec exactly like the
-#: declared mirror does.
-LIBRARY: dict[str, QuerySpec] = {}
-
 
 def register(
     name: str,
@@ -64,24 +55,6 @@ def register(
         if name in REGISTRY:
             raise ValueError(f"duplicate query name: {name}")
         REGISTRY[name] = QuerySpec(name=name, fn=fn, oracle=oracle, note=note, tags=tags)
-        return fn
-
-    return deco
-
-
-def register_library(
-    name: str,
-    oracle: str | None = None,
-    note: str = "",
-    tags: tuple[str, ...] = (),
-) -> Callable[[QueryFn], QueryFn]:
-    """Decorator: register a library operator (oracle-pinned in tests, not
-    part of the declared driver/bench suite)."""
-
-    def deco(fn: QueryFn) -> QueryFn:
-        if name in LIBRARY or name in REGISTRY:
-            raise ValueError(f"duplicate query name: {name}")
-        LIBRARY[name] = QuerySpec(name=name, fn=fn, oracle=oracle, note=note, tags=tags)
         return fn
 
     return deco
@@ -366,16 +339,3 @@ def load_all() -> dict[str, QuerySpec]:
     ordered = sorted(REGISTRY, key=lambda n: rank.get(n, -1))
     return {name: REGISTRY[name] for name in ordered}
 
-
-def load_library() -> dict[str, QuerySpec]:
-    """Import every query module and return the library (non-declared)
-    specs — oracle-pinned in tests, invisible to the driver/bench."""
-    load_all()
-    return dict(LIBRARY)
-
-
-def load_full() -> dict[str, QuerySpec]:
-    """Library + declared specs in one dict (test/tool convenience —
-    NEVER the driver surface; names are disjoint by construction)."""
-    declared = load_all()
-    return {**LIBRARY, **declared}

@@ -143,18 +143,22 @@ def compare_frames(spark_pdf: pd.DataFrame, oracle_pdf: pd.DataFrame) -> list[st
 
 
 def run_compare(spark, name: str, sf_dir: str) -> list[str]:
-    """Run declared query `name` on Spark and its oracle on DuckDB; compare.
+    """Run declared query `name` on Spark and its oracle on DuckDB; compare."""
+    from join_example_spark.registry import load_all
 
-    Falls back to the library (non-declared) registry so retired baselines
-    keep their oracle-parity pins (round 12)."""
-    from join_example_spark.registry import load_all, load_library
-
-    spec = load_all().get(name) or load_library()[name]
+    spec = load_all()[name]
     assert spec.oracle is not None, f"{name} is rows-only"
-    spark_pdf = spec.fn(spark, sf_dir).toPandas()
+    return compare_fn(spark, spec.fn, spec.oracle, sf_dir)
+
+
+def compare_fn(spark, fn, oracle_sql: str, sf_dir: str) -> list[str]:
+    """Run ``fn(spark, sf_dir)`` on Spark and ``oracle_sql`` on DuckDB;
+    compare. Also serves the plain reference functions that are not
+    declared queries but keep a row-level oracle twin."""
+    spark_pdf = fn(spark, sf_dir).toPandas()
     con = duckdb_connection(sf_dir)
     try:
-        oracle_pdf = con.sql(spec.oracle).df()
+        oracle_pdf = con.sql(oracle_sql).df()
     finally:
         con.close()
     return compare_frames(spark_pdf, oracle_pdf)

@@ -22,7 +22,7 @@ SENSITIVE = [
     "q_limit_offset",     # pagination boundary
     "q_win_topk_per_group",  # rank ties
     "q_llm_sim_topk",     # float dot-product fold + rank ties
-    "q_llm_dedup_cluster",  # iterative fixpoint under different partitioning
+    "q_llm_cluster_quality",  # min-label CC fixpoint under different partitioning
     "q_multimodal_decode",  # Arrow batch boundaries differ with partitioning
     # round-2 additions
     "q_llm_dedup_keep_best",  # star-contraction fixpoint + window ties
@@ -44,7 +44,6 @@ SENSITIVE = [
     "q_llm_dedup_incremental",  # two semi-join verdict paths merged by left joins
     # round-4 additions
     "q_llm_pq_quantize",        # MIN(STRUCT) argmin + decimal error sum under merge trees
-    "q_llm_sim_pq_rerank_baseline",  # two-stage shortlist boundary + rank ties
     "q_llm_sim_ivfpq",          # IVF cells x PQ LUT x shortlist x rerank composition
     "q_llm_decontaminate_semantic",  # MAX(STRUCT) best-match under different merge trees
     "q_llm_dedup_semantic_incr",     # left-join verdict merge + struct-max tiebreak
@@ -56,7 +55,6 @@ SENSITIVE = [
     "q_win_sliding_distinct_hll",  # windowed HLL union merge under different partitioning
     # round-5 additions
     "q_llm_split_leakage_safe",  # identity contraction + CC labels + cluster hash
-    "q_llm_dedup_semantic_imi",  # product-cell candidates + contraction fixpoint
     "q_llm_imi_recall",          # two-codebook assignment + pair-hit join folds
     "q_llm_dedup_substring",     # window-hash histogram + per-doc rollup merge
     "q_audience_overlap_hll",    # HLL IE over per-type sketch merge trees

@@ -19,9 +19,10 @@ these pin the structural contracts a silent edit would break first:
 
 from __future__ import annotations
 
-# load_full: the margin flat-truth baselines these pins exercise moved
-# to the library tier in round 12 (declared + library, disjoint names)
-from join_example_spark.registry import load_full
+# The margin flat truths are plain reference functions (not declared
+# queries); the IVF siblings they check are declared.
+from join_example_spark.queries import llm_similarity as sim_q
+from join_example_spark.registry import load_all
 
 SF = "/root/testdata/sf0.001"
 SF01 = "/root/testdata/sf0.01"
@@ -55,7 +56,7 @@ class TestMarginScreenDials:
 
         assert MARGIN_ESC_MARGIN == 0.04
         assert MARGIN_ESC_FLOOR == 0.29
-        reg = load_full()
+        reg = load_all()
         sql = reg["q_llm_mine_margin_ivf"].oracle
         assert ">= 0.04" in sql and ">= 0.29" in sql
         assert "arn <= 4" in sql and "arn <= 5" in sql
@@ -68,10 +69,10 @@ class TestGrayZoneEscalation:
         # flat truth row — including escalated-but-REJECTED rows (their
         # estimates are replaced by exact values, which is what makes the
         # final accepted flag exact at the 0.05/0.3 thresholds).
-        reg = load_full()
+        reg = load_all()
         flat = {
             r["probe_id"]: r
-            for r in reg["q_llm_mine_margin_baseline"].fn(spark, SF01).collect()
+            for r in sim_q.q_llm_mine_margin_baseline(spark, SF01).collect()
         }
         ivf = reg["q_llm_mine_margin_ivf"].fn(spark, SF01).collect()
         widened = [
@@ -91,7 +92,7 @@ class TestGrayZoneEscalation:
         # GROUP BY dedup exists to prevent). margin == 0.0 from two
         # DISTINCT equally-similar candidates remains legal; the oracle
         # mirror certifies values, this pins the row-shape.
-        reg = load_full()
+        reg = load_all()
         rows = reg["q_llm_mine_margin_ivf"].fn(spark, SF).collect()
         assert len(rows) == len({r["probe_id"] for r in rows})
         for r in rows:
@@ -106,10 +107,10 @@ class TestGrayZoneEscalation:
         # outside the q=4/p=5 cell overlap at this SF, so 0.5 is the
         # current measured point — pin it as the floor so a screen
         # regression (0 accepts) still fails loudly.
-        reg = load_full()
+        reg = load_all()
         flat_acc = {
             r["probe_id"]: r["best_id"]
-            for r in reg["q_llm_mine_margin_baseline"].fn(spark, SF01).collect()
+            for r in sim_q.q_llm_mine_margin_baseline(spark, SF01).collect()
             if r["accepted"]
         }
         ivf_acc = {
@@ -128,7 +129,7 @@ class TestGrayZoneEscalation:
         # q_llm_mine_margin_recall (round 10): single-row audit; the
         # precision_exact boolean IS the verify-the-positives contract
         # and must hold at every SF; hits can never exceed either count.
-        reg = load_full()
+        reg = load_all()
         for sf in (SF, SF01):
             row = reg["q_llm_mine_margin_recall"].fn(spark, sf).collect()
             assert len(row) == 1
@@ -183,13 +184,12 @@ class TestCalibrated095Dial:
 
 class TestRatioMarginFamily:
     def test_family_declared_and_oracled(self):
-        reg = load_full()
-        for name in (
-            "q_llm_mine_margin_ratio_baseline",
-            "q_llm_mine_margin_ratio_ivf",
-        ):
-            assert name in reg
-            assert reg[name].oracle is not None
+        # the IVF default is declared with its oracle twin; the flat truth
+        # is a plain function whose oracle twin is a module constant
+        reg = load_all()
+        assert reg["q_llm_mine_margin_ratio_ivf"].oracle is not None
+        assert "q_llm_mine_margin_ratio_baseline" not in reg
+        assert "FROM rk WHERE rn = 1" in sim_q.MARGIN_RATIO_BASELINE_ORACLE
 
     def test_accepted_rows_are_exact_flat_truth(self, spark):
         # The ratio family inherits the verify-the-positives contract:
@@ -198,13 +198,11 @@ class TestRatioMarginFamily:
         # cross-plan check the oracle mirror cannot see (both twins use
         # the same lossless shortlist; a shortlist soundness bug would
         # cancel out there, not here).
-        reg = load_full()
+        reg = load_all()
         for sf in (SF, SF01):
             flat = {
                 r["probe_id"]: r
-                for r in reg["q_llm_mine_margin_ratio_baseline"]
-                .fn(spark, sf)
-                .collect()
+                for r in sim_q.q_llm_mine_margin_ratio_baseline(spark, sf).collect()
             }
             ivf = reg["q_llm_mine_margin_ratio_ivf"].fn(spark, sf).collect()
             accepted = [r for r in ivf if r["accepted"]]
@@ -221,12 +219,11 @@ class TestRatioMarginFamily:
         # small-n ratios sit well above 1.05), which weakens the oracle's
         # boolean certification — re-derive it from the emitted values so
         # a sign-flip in either gate fails loudly.
-        reg = load_full()
-        for name in (
-            "q_llm_mine_margin_ratio_baseline",
-            "q_llm_mine_margin_ratio_ivf",
+        for name, fn in (
+            ("q_llm_mine_margin_ratio_baseline", sim_q.q_llm_mine_margin_ratio_baseline),
+            ("q_llm_mine_margin_ratio_ivf", load_all()["q_llm_mine_margin_ratio_ivf"].fn),
         ):
-            for r in reg[name].fn(spark, SF).collect():
+            for r in fn(spark, SF).collect():
                 assert r["accepted"] == (
                     r["ratio"] >= 1.05 and r["best_sim"] >= 0.3
                 ), (name, r)

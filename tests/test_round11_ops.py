@@ -1,5 +1,5 @@
 """Round-11 pins: the nonneg-clamped ratio-margin dens (ADVICE r10), the
-1-in-100 ratio-family probe split, and the declared ratio accept-recall /
+1-in-100 ratio-family probe split, and the ratio accept-recall /
 escalated-fraction audit (verdict task 4)."""
 
 from __future__ import annotations
@@ -121,7 +121,7 @@ class TestRatioContractsOnPlantedNegativeGeometry:
     ):
         # The ADVICE-r10 bug class: the family's screening bounds silently
         # assumed nonnegative neighbor sims. This property test feeds the
-        # DECLARED plans (via a synthetic embeddings.parquet fixture dir)
+        # shipped ratio plans (via a synthetic embeddings.parquet fixture dir)
         # seeded raw-Gaussian sets — dots go negative aggressively at
         # these sizes — and asserts the two contracts the round-11 clamp
         # makes theorems: precision_exact always (accepted rows carry
@@ -133,9 +133,10 @@ class TestRatioContractsOnPlantedNegativeGeometry:
         import math
         import random
 
-        from join_example_spark.registry import load_full
+        from join_example_spark.queries.llm_similarity import (
+            q_llm_mine_margin_ratio_recall,
+        )
 
-        reg = load_full()
         for seed in (7, 23, 101):
             rnd = random.Random(seed)
             rows = []
@@ -156,9 +157,7 @@ class TestRatioContractsOnPlantedNegativeGeometry:
                 rows, "vec_id bigint, embedding array<float>, label string"
             ).write.parquet(str(d / "embeddings.parquet"))
 
-            audit = (
-                reg["q_llm_mine_margin_ratio_recall"].fn(spark, str(d)).collect()
-            )
+            audit = q_llm_mine_margin_ratio_recall(spark, str(d)).collect()
             assert len(audit) == 1
             r = audit[0]
             assert r["precision_exact"] is True, (seed, r)
@@ -257,28 +256,18 @@ class TestSymmetrizedTopkOptIn:
 
 
 class TestRatioRecallAudit:
-    def test_registered_and_oracled(self):
-        # LIBRARY tier since round 13 (suite-budget composition) — the
-        # audit keeps its oracle twin and both-SF mirror pins
-        # (tests/test_round13_ops.py), it just left the driver surface.
-        from join_example_spark.registry import load_full, load_library
-
-        lib = load_library()
-        assert "q_llm_mine_margin_ratio_recall" in lib
-        assert lib["q_llm_mine_margin_ratio_recall"].oracle is not None
-        assert "q_llm_mine_margin_ratio_recall" in load_full()
-
     def test_fixture_values(self, spark):
         # Accept-all regime at fixture SFs: every probe escalates
         # (escalated_frac 1.0 — the cost observable a 100 TB deployment
         # gates on, degenerate here by construction, see SCALE §3.15) and
         # the verified accepts hit flat truth exactly (precision AND
         # recall 1.0 — the lossless-shortlist certificate).
-        from join_example_spark.registry import load_full
+        from join_example_spark.queries.llm_similarity import (
+            q_llm_mine_margin_ratio_recall,
+        )
 
-        reg = load_full()
         for sf in (SF, SF01):
-            rows = reg["q_llm_mine_margin_ratio_recall"].fn(spark, sf).collect()
+            rows = q_llm_mine_margin_ratio_recall(spark, sf).collect()
             assert len(rows) == 1
             r = rows[0]
             assert r["n_probes"] == 5, (sf, r)

@@ -1,13 +1,12 @@
 """Round-12 pins.
 
-1. Library-tier oracle mirrors: the two quadratic ground-truth baselines
-   retired from the declared suite (suite-budget composition, VERDICT r11
-   task 2) keep their FULL DuckDB-oracle parity proof here — same
-   normalization as the driver, both fixture SFs — so retirement costs
-   zero evidence. Driver history: both were green r4–r11.
-2. Registry-tier invariants for the new library registry (disjointness,
-   oracle presence).
-3. NULL-user regression pins for the two-level count-distinct rewrites
+1. Row-level oracle mirrors of the two margin flat truths
+   (q_llm_mine_margin_baseline, q_llm_mine_margin_ratio_baseline): plain
+   reference functions, not declared queries, that the declared margin
+   audits and the round-9/10 pins compare against. Their FULL DuckDB-oracle
+   parity proof stays here — same normalization as the driver, both
+   fixture SFs.
+2. NULL-user regression pins for the two-level count-distinct rewrites
    (ADVICE r11): outer count(user_id) must match COUNT(DISTINCT user_id)
    even when NULL user_ids exist.
 """
@@ -16,44 +15,29 @@ from __future__ import annotations
 
 import pytest
 
+from join_example_spark.queries import llm_similarity as sim_q
 from tests.conftest import SF_ORACLE, SF_SMOKE
-from tests.oracle_utils import run_compare
+from tests.oracle_utils import compare_fn
 
-RETIRED_BASELINES = [
-    "q_llm_dedup_semantic_exact",
-    "q_llm_sim_pq_rerank_baseline",
-    # the margin flat truths: their plans still execute INSIDE the declared
-    # recall audits every round; these pins keep their per-probe row-level
-    # oracle proofs (the audits only certify aggregated accept stats)
-    "q_llm_mine_margin_baseline",
-    "q_llm_mine_margin_ratio_baseline",
-]
+# the margin flat truths: their plans execute inside the declared recall
+# audits; these pins keep their per-probe row-level oracle proofs (the
+# audits only certify aggregated accept stats)
+FLAT_TRUTHS = {
+    "q_llm_mine_margin_baseline": sim_q.MARGIN_BASELINE_ORACLE,
+    "q_llm_mine_margin_ratio_baseline": sim_q.MARGIN_RATIO_BASELINE_ORACLE,
+}
 
 
-@pytest.mark.parametrize("name", RETIRED_BASELINES)
+@pytest.mark.parametrize("name", FLAT_TRUTHS)
 def test_library_baseline_mirror_smoke(spark, name):
-    problems = run_compare(spark, name, SF_SMOKE)
+    problems = compare_fn(spark, getattr(sim_q, name), FLAT_TRUTHS[name], SF_SMOKE)
     assert not problems, problems
 
 
-@pytest.mark.parametrize("name", RETIRED_BASELINES)
+@pytest.mark.parametrize("name", FLAT_TRUTHS)
 def test_library_baseline_mirror_sf001(spark, name):
-    problems = run_compare(spark, name, SF_ORACLE)
+    problems = compare_fn(spark, getattr(sim_q, name), FLAT_TRUTHS[name], SF_ORACLE)
     assert not problems, problems
-
-
-def test_library_registry_invariants():
-    from join_example_spark.registry import load_all, load_library
-
-    declared = load_all()
-    lib = load_library()
-    # the retirees live in exactly one tier
-    for name in RETIRED_BASELINES:
-        assert name in lib and name not in declared, name
-    # disjoint namespaces, every library spec keeps its oracle twin
-    assert not set(lib) & set(declared)
-    for spec in lib.values():
-        assert spec.oracle is not None, f"{spec.name} lost its oracle"
 
 
 def test_url_canonicalization_planted_cases(spark):

@@ -8,6 +8,7 @@
    degenerate salts=1.
 2. URL-canonicalizer regression pins for the ADVICE r12 escape bug live in
    tests/test_round12_ops.py (planted wwwx.com / indexZhtml cases).
+3. The both-SF oracle mirror of the ratio-margin accept-recall audit.
 """
 
 from __future__ import annotations
@@ -16,42 +17,27 @@ import pytest
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from join_example_spark.queries import llm_similarity as sim_q
 from tests.conftest import SF_ORACLE, SF_SMOKE
-from tests.oracle_utils import run_compare
+from tests.oracle_utils import compare_fn
 
-#: Round-13 library-tier retirees (suite-budget composition, VERDICT r12
-#: task 1): the two heaviest declared queries by envelope median (~13 s
-#: combined). Same protocol as the round-12 retirement: decorator swap,
-#: full oracle-parity proof preserved HERE at both fixture SFs, rotation
-#: regenerated, SURVEY §2.11 status L. Their postures stay driver-audited
-#: by siblings: the ratio screen via q_llm_mine_margin_ratio_ivf, the IMI
-#: index via q_llm_imi_recall / q_llm_sim_imi / q_llm_sim_imipq.
-RETIRED_R13 = [
-    "q_llm_mine_margin_ratio_recall",
-    "q_llm_dedup_semantic_imi",
-]
+#: The ratio-margin accept-recall audit: a plain reference function, not a
+#: declared query (its screen stays driver-audited via the declared
+#: q_llm_mine_margin_ratio_ivf). Its full oracle-parity proof stays HERE at
+#: both fixture SFs.
+RATIO_RECALL = {"q_llm_mine_margin_ratio_recall": sim_q.MARGIN_RATIO_RECALL_ORACLE}
 
 
-@pytest.mark.parametrize("name", RETIRED_R13)
+@pytest.mark.parametrize("name", RATIO_RECALL)
 def test_r13_library_mirror_smoke(spark, name):
-    problems = run_compare(spark, name, SF_SMOKE)
+    problems = compare_fn(spark, getattr(sim_q, name), RATIO_RECALL[name], SF_SMOKE)
     assert not problems, problems
 
 
-@pytest.mark.parametrize("name", RETIRED_R13)
+@pytest.mark.parametrize("name", RATIO_RECALL)
 def test_r13_library_mirror_sf001(spark, name):
-    problems = run_compare(spark, name, SF_ORACLE)
+    problems = compare_fn(spark, getattr(sim_q, name), RATIO_RECALL[name], SF_ORACLE)
     assert not problems, problems
-
-
-def test_r13_retirees_in_library_tier_only():
-    from join_example_spark.registry import load_all, load_library
-
-    declared = load_all()
-    lib = load_library()
-    for name in RETIRED_R13:
-        assert name in lib and name not in declared, name
-        assert lib[name].oracle is not None, f"{name} lost its oracle"
 
 
 def _planted_skew_df(spark):
@@ -201,22 +187,21 @@ def test_ann_plan_build_runs_no_scan_jobs(spark, monkeypatch):
     full-scan count job)."""
     from pyspark.sql import DataFrame
 
-    from join_example_spark.registry import load_full
+    from join_example_spark.registry import load_all
 
     def boom(self):
         raise AssertionError("plan-build ran a DataFrame.count() action")
 
     monkeypatch.setattr(DataFrame, "count", boom)
-    full = load_full()
+    declared = load_all()
     for name in (
         "q_llm_ann_recall_nprobe",
         "q_llm_imi_recall",
-        "q_llm_sim_pq_rerank_baseline",
         "q_llm_sim_ivfpq",
         "q_llm_embed_outliers",
         "q_llm_mine_margin_ivf",
     ):
-        df = full[name].fn(spark, "/root/testdata/sf0.001")
+        df = declared[name].fn(spark, SF_SMOKE)
         assert df.columns  # plan built, no action ran
 
 

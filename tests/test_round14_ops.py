@@ -1,51 +1,16 @@
 """Round-14 pins.
 
-1. Library-tier retirement of q_llm_dedup_cluster (VERDICT r13 task 3):
-   the naive min-label-propagation CC loop leaves the declared suite
-   (q_llm_dedup_cluster_star certifies the same clustering contract
-   against the same recursive-CTE oracle at half the cost, and IS the
-   scale path — O(log n) rounds vs O(diameter)); full oracle parity for
-   the retiree is preserved here at both fixture SFs.
-2. q_llm_quality_model third-implementation pin: the oracle mirror proves
-   Spark == DuckDB; this recomputes a sample of documents' scores in pure
-   Python (tokenize -> portable char-fold hash -> frozen affine weights)
-   so a spec bug shared by both SQL twins can't hide.
+q_llm_quality_model third-implementation pin: the oracle mirror proves
+Spark == DuckDB; this recomputes a sample of documents' scores in pure
+Python (tokenize -> portable char-fold hash -> frozen affine weights) so a
+spec bug shared by both SQL twins can't hide.
 """
 
 from __future__ import annotations
 
-import pytest
 from pyspark.sql import functions as F
 
-from tests.conftest import SF_ORACLE, SF_SMOKE
-from tests.oracle_utils import run_compare
-
-#: Round-14 library-tier retiree (suite-budget composition).
-RETIRED_R14 = ["q_llm_dedup_cluster"]
-
-
-@pytest.mark.parametrize("name", RETIRED_R14)
-def test_r14_library_mirror_smoke(spark, name):
-    problems = run_compare(spark, name, SF_SMOKE)
-    assert not problems, problems
-
-
-@pytest.mark.parametrize("name", RETIRED_R14)
-def test_r14_library_mirror_sf001(spark, name):
-    problems = run_compare(spark, name, SF_ORACLE)
-    assert not problems, problems
-
-
-def test_r14_retirees_in_library_tier_only():
-    from join_example_spark.registry import load_all, load_library
-
-    declared = load_all()
-    lib = load_library()
-    for name in RETIRED_R14:
-        assert name in lib and name not in declared, name
-        assert lib[name].oracle is not None, f"{name} lost its oracle"
-    # the sibling that carries the clustering contract stays declared
-    assert "q_llm_dedup_cluster_star" in declared
+from tests.conftest import SF_SMOKE
 
 
 def _py_str_hash(s: str, p: int = 1_000_003) -> int:

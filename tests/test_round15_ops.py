@@ -1,48 +1,10 @@
 """Round-15 pins: ADVICE r14 fixes (envelope-median floor in the suspect
-rule, cross-SF redraw gate), the q_llm_dedup_semantic_ivf library-tier
-retirement mirror, and the bigram-upgraded quality model (added in this
-round's later commits)."""
+rule, cross-SF redraw gate), the environment probe, and the fan-out
+repartition of small scans."""
 
 from __future__ import annotations
 
-import pytest
-
-from tests.conftest import SF_ORACLE, SF_SMOKE
-from tests.oracle_utils import run_compare
-
-#: Round-15 library-tier retiree (suite-budget composition, VERDICT r14
-#: task 1): the cheap-dial (nprobe=1) sibling of the declared multi-probe
-#: semantic-dedup default. The semantic-edge machinery it shares with
-#: q_llm_dedup_semantic and q_llm_split_leakage_safe executed 3x per
-#: suite run; the nprobe recall curve stays driver-audited via
-#: q_llm_ann_recall_nprobe.
-RETIRED_R15 = ["q_llm_dedup_semantic_ivf"]
-
-
-@pytest.mark.parametrize("name", RETIRED_R15)
-def test_r15_library_mirror_smoke(spark, name):
-    problems = run_compare(spark, name, SF_SMOKE)
-    assert not problems, problems
-
-
-@pytest.mark.parametrize("name", RETIRED_R15)
-def test_r15_library_mirror_sf001(spark, name):
-    problems = run_compare(spark, name, SF_ORACLE)
-    assert not problems, problems
-
-
-def test_r15_retirees_in_library_tier_only():
-    from join_example_spark.registry import load_all, load_library
-
-    declared = load_all()
-    lib = load_library()
-    for name in RETIRED_R15:
-        assert name in lib and name not in declared, name
-        assert lib[name].oracle is not None, f"{name} lost its oracle"
-    # the siblings that carry the declared semantic contract stay declared
-    assert "q_llm_dedup_semantic" in declared
-    assert "q_llm_split_leakage_safe" in declared
-    assert "q_llm_ann_recall_nprobe" in declared
+from tests.conftest import SF_SMOKE
 
 
 def test_concentrated_excess_floors_zero_median():
@@ -113,21 +75,6 @@ def test_env_probe_runs_and_matches_code_assumptions():
     # reference probe is structural (empty or not, it must report)
     assert isinstance(doc["reference"].get("file_count", 0), int)
     assert doc["versions"]["pyspark"].startswith("4.")
-
-
-def test_bench_library_pass_is_optin_and_excluded_from_total():
-    """VERDICT r14 task 6: `bench.py --library` times the library-tier
-    operators into bench_full.json's "library" section only — never the
-    driver-recorded total, stdout queries map, or envelope. Source-level
-    pin: the pass is argv-gated and sums into its own total."""
-    src = open("bench.py").read()
-    assert '"--library" in sys.argv' in src
-    assert '"library": library' in src
-    # the library pass must come AFTER the redraw stage (so redraw budget
-    # and suspects never see library draws) and write into lib_timings,
-    # not the declared `timings` map the total sums
-    assert src.index('"--library" in sys.argv') > src.index("redraw_budget")
-    assert "lib_timings[name] = round" in src
 
 
 def test_fanout_repartition_spreads_small_scans_and_noops_at_scale(spark):

@@ -37,14 +37,11 @@ def test_zorder_buckets_bound_both_spans(spark):
 
 
 def test_keep_best_elects_true_representative(spark):
-    # q_llm_dedup_cluster is library tier since round 14 — load the full
-    # (declared + library) registry for the cluster labels it checks
-    # keep_best against.
-    from join_example_spark.registry import load_full
-
+    # Reference labels: the declared near-dup clustering (oracle-pinned
+    # against its recursive-CTE reachability twin).
     labels = {
         r.doc_id: r.cluster_id
-        for r in load_full()["q_llm_dedup_cluster"].fn(spark, SF_SMOKE).collect()
+        for r in _REG["q_llm_dedup_cluster_star"].fn(spark, SF_SMOKE).collect()
     }
     docs = {
         r.doc_id: r.n_chars

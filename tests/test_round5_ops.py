@@ -252,44 +252,6 @@ def test_imi_recall_floor_smoke(spark):
     assert 0.0 < row.cand_frac < 0.65, row
 
 
-def test_imi_identity_contraction_component_equivalence(spark):
-    """The contraction theorem holds for the IMI edge path too: k-fold
-    bit-identical duplication (disjoint ids) leaves cluster ids and
-    elected reps invariant and scales every cluster_size by k. This is
-    what makes q_llm_dedup_semantic_imi safe on duplicate-saturated
-    corpora — without contraction the product-cell join would pay k² in
-    pair volume."""
-    from join_example_spark.operators.similarity import identity_contracted_imi_edges
-    from join_example_spark.queries.llm_dedup import _semantic_cluster_reps
-
-    emb = read_table(spark, SF_SMOKE, "embeddings")
-    k = 3
-    dup = emb
-    for i in range(1, k):
-        dup = dup.unionByName(
-            emb.select(
-                (F.col("vec_id") + F.lit(i * 1_000_000)).alias("vec_id"),
-                "embedding",
-                "label",
-            )
-        )
-
-    def clusters(df):
-        return {
-            r.cluster_id: (r.rep_vec_id, r.cluster_size)
-            for r in _semantic_cluster_reps(
-                df, identity_contracted_imi_edges(df)
-            ).collect()
-        }
-
-    small = clusters(emb)
-    big = clusters(dup)
-    want = {cid: (rep, sz * k) for cid, (rep, sz) in small.items()}
-    assert big == want, (
-        {c: (big.get(c), want.get(c)) for c in set(big) ^ set(want) or list(want)[:3]}
-    )
-
-
 def test_substring_decontamination_catches_planted_leak(spark):
     """True-positive control: graft a 60-char span from a benchmark
     (src19) document into a long-enough train document and the audit

@@ -312,7 +312,29 @@ def test_watermark_drop_counter_equals_planted_late_rows(spark, tmp_path, late_e
 
 @pytest.mark.streaming
 def test_stateful_sessionization_matches_batch_sessions(spark, tmp_path):
-    streamed = _final(demos.sessionize_stateful(spark, SF_SMOKE), tmp_path, "sess")
+    import pyarrow.parquet as pq
+
+    streamed, progress = demos.run_with_progress(
+        demos.sessionize_stateful(spark, SF_SMOKE), str(tmp_path / "sess")
+    )
+    # State rows and timeouts, per trigger: the one data trigger leaves one
+    # open session per user in state; the following no-data trigger moves
+    # the watermark past every session's event-time timeout, which flushes
+    # and removes every state row.
+    n_users = len(
+        set(pq.read_table(f"{SF_SMOKE}/events.parquet", columns=["user_id"])
+            .column("user_id").to_pylist())
+    )
+
+    def state_op(p):
+        (op,) = [o for o in p.stateOperators if o.operatorName == "applyInPandasWithState"]
+        return op
+
+    assert len(progress) >= 2, [p.numInputRows for p in progress]
+    assert state_op(progress[0]).numRowsTotal == n_users
+    assert progress[1].numInputRows == 0
+    assert state_op(progress[1]).numRowsRemoved == n_users
+    assert state_op(progress[1]).numRowsTotal == 0
     batch = load_all()["q_stream_session"].fn(spark, SF_SMOKE)
     # The stateful op emits sessions closed by a subsequent event or state
     # timeout; with AvailableNow over a bounded file the final open session

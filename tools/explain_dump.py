@@ -28,11 +28,11 @@ def main() -> None:
     args = ap.parse_args()
 
     from join_example_spark.conf import build_local_session
-    from join_example_spark.registry import load_full
+    from join_example_spark.registry import load_all
 
     spark = build_local_session(app_name="explain-dump", cores=4)
     spark.sparkContext.setLogLevel("ERROR")
-    registry = load_full()
+    registry = load_all()
     os.makedirs(args.out, exist_ok=True)
     for name in args.queries:
         df = registry[name].fn(spark, args.sf_dir)

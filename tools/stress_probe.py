@@ -42,11 +42,8 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 DEFAULT_QUERIES = [
     "q_llm_pq_quantize",
     "q_llm_sim_pq_adc",
-    "q_llm_sim_pq_rerank_baseline",
     "q_llm_decontaminate_semantic",
     "q_llm_dedup_semantic",
-    "q_llm_dedup_semantic_ivf",
-    "q_llm_dedup_semantic_imi",
 ]
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -78,10 +75,7 @@ def main() -> None:
         .getOrCreate()
     )
     ensure_session_confs(spark)
-    from join_example_spark.registry import load_library
-
-    # Library (retired-baseline) specs stay probeable alongside declared ones.
-    reg = {**load_library(), **load_all()}
+    reg = load_all()
 
     os.makedirs(PROBE_DIR, exist_ok=True)
 

@@ -1,5 +1,5 @@
 #!/usr/bin/env python
-"""Time declared/library queries in isolation with the noop sink.
+"""Time declared queries in isolation with the noop sink.
 
 Usage:
     python tools/time_query.py q_llm_repetition [q_...] [--n 3] [--sf-dir D]
@@ -33,13 +33,13 @@ def main() -> None:
     args = ap.parse_args()
 
     from join_example_spark.conf import build_local_session, codegen_compile_ms, codegen_compiles
-    from join_example_spark.registry import load_full
+    from join_example_spark.registry import load_all
 
     spark = build_local_session(
         app_name="time-query", cores=args.cores, shuffle_partitions=int(args.cores)
     )
     spark.sparkContext.setLogLevel("ERROR")
-    registry = load_full()
+    registry = load_all()
     for name in args.queries:
         spec = registry[name]
         draws, compiles, compile_ms = [], [], []
